@@ -93,9 +93,9 @@ object SchemaTranslator {
     val schema = toSparkSchema(table)
     // field ids must reach the parquet footers (the .as overload WITH
     // metadata — a bare alias would strip them), and the writer conf
-    // must be on (it defaults on in this Spark line; set explicitly so
-    // the evolution read path never depends on a default)
-    df.sparkSession.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+    // must be on (it defaults on; a session that turned it off fails
+    // here, before any file is written)
+    graft.sources.IcebergSnapshot.requireFieldIdWrite(df.sparkSession)
     val casted = df.select(schema.fields.map(f =>
       org.apache.spark.sql.functions.col(f.name).cast(f.dataType)
         .as(f.name, f.metadata)): _*)

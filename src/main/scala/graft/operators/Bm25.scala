@@ -98,17 +98,11 @@ object Bm25 {
     * (q_id, rk, doc, score), rk 1..k by score desc, doc id asc. */
   def search(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, k: Int, k1: Double = 1.2, b: Double = 0.75,
-      linearIdf: Boolean = false,
-      tfPersist: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.NONE): DataFrame = {
+      linearIdf: Boolean = false): DataFrame = {
     // two consumers of the postings aggregate (the contribution join
-    // and the document-frequency aggregate) — persist knob with the
-    // jaccardPairs caller-owns-release contract: NONE (recompute the
-    // scan-side projection) for the 100 TB path, MEMORY_AND_DISK at
-    // bench/cluster scales where one tokenization pass fits storage
-    val tf0 = termFrequencies(docs, idCol, textCol)
-    val tf = if (tfPersist == org.apache.spark.storage.StorageLevel.NONE) tf0
-      else tf0.persist(tfPersist)
+    // and the document-frequency aggregate); both recompute the
+    // scan-side projection rather than persisting it
+    val tf = termFrequencies(docs, idCol, textCol)
     val dl = docs.select(col(idCol),
       size(filter(TextFunctions.words(col(textCol)),
         t => length(t) > 0)).cast("double").as("dl"))

@@ -97,10 +97,12 @@ object Db2Parser {
       }
     }
 
-    // Pass 2: ALTER TABLE / DISTRIBUTE BY HASH linkage
+    // Pass 2: ALTER TABLE / DISTRIBUTE BY HASH linkage. Pass 2 never
+    // renames a table, so one name index serves every ALTER.
+    val byName = tables.indices.groupBy(i => nameKey(tables(i).name))
     for (stmt <- statements) {
       val s = stripLeadingComments(stmt)
-      if (AlterStmtPattern.matcher(s).find()) processAlterTable(s, tables, warnings)
+      if (AlterStmtPattern.matcher(s).find()) processAlterTable(s, tables, byName, warnings)
       else if (DistributeStmtPattern.matcher(s).find()) processDistributeByHash(s, tables)
     }
 
@@ -109,20 +111,31 @@ object Db2Parser {
 
   // ---------------------------------------------------------------- pass 2
 
+  /** Case fold under which `equalsIgnoreCase`-equal names share a key
+    * (char-wise upper-then-lower, the same fold `equalsIgnoreCase`
+    * applies), so a key bucket holds every candidate for a name. */
+  private def nameKey(name: String): String =
+    name.map(c => Character.toLowerCase(Character.toUpperCase(c)))
+
   /** ALTER TABLE linkage (parser.py:207-261): case-insensitive name match,
-    * schema matched only when both sides have one; merges PARTITION BY and
-    * ADD CONSTRAINT…PRIMARY KEY (PK only if none present yet). */
+    * schema matched only when the ALTER names one (a table without a
+    * schema then never matches); the first pass-1 table in script order
+    * wins. Merges PARTITION BY and ADD CONSTRAINT…PRIMARY KEY (PK only
+    * if none present yet). `byName` holds the pass-1 table indices in
+    * ascending order, keyed by [[nameKey]]. */
   private def processAlterTable(stmt: String, tables: ArrayBuffer[TableDef],
+      byName: Map[String, IndexedSeq[Int]],
       warnings: ArrayBuffer[String]): Unit = {
     val m = AlterTablePattern.matcher(stmt)
     if (!m.lookingAt()) return
     val schema = Option(m.group(1)).map(cleanIdentifier)
     val tableName = cleanIdentifier(m.group(2))
 
-    val idx = tables.indexWhere { t =>
+    val idx = byName.getOrElse(nameKey(tableName), IndexedSeq.empty).find { i =>
+      val t = tables(i)
       t.name.equalsIgnoreCase(tableName) &&
         (schema.isEmpty || t.schema.exists(_.equalsIgnoreCase(schema.get)))
-    }
+    }.getOrElse(-1)
     if (idx < 0) {
       val ref = schema.map(s => s"$s.$tableName").getOrElse(tableName)
       warnings += s"ALTER TABLE references unknown table: $ref"

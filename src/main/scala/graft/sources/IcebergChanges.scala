@@ -172,14 +172,7 @@ object IcebergChanges {
     if (files.isEmpty) None
     else Some {
       val scanned = normalized(
-        files.groupBy(_.specId).toSeq.sortBy(_._1).map { case (sid, fs) =>
-          restoreIdentityColumnsFor(spark,
-            scanDataFiles(spark, table, fs.map(_.path), sid),
-            table, partitionFieldsOf(table, sid),
-            dirEncodedIdentityCols(table, sid),
-            fs.map(f => (f.path, f.partitionValues)),
-            castToDeclared = table.partitionSpecs.nonEmpty)
-        }.reduce(_ unionByName _), table)
+        scanLiveFiles(spark, table, files, withRowMeta = false), table)
       if (pruning.isEmpty) scanned
       else scanned.where(
         IcebergPruning.residualFilter(scanned, table, pruning))

@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, regexp_replace, udf}
+import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.types.{IntegerType, MetadataBuilder, StringType, StructField, StructType}
 
 import graft.model.TableDef
@@ -50,15 +50,6 @@ object IcebergDeletes {
   /** Spec reserved field ids for position delete files. */
   val DeleteFilePathFieldId: Long = 2147483546L
   val DeleteFilePosFieldId: Long = 2147483545L
-
-  private def norm(c: Column): Column =
-    regexp_replace(c, "^[a-zA-Z0-9+.-]+:/+", "/")
-
-  /** Driver-side twin of [[norm]] — same scheme-strip, NO %XX
-    * decoding, so map keys and scan-side probes agree byte-for-byte
-    * even on escaped paths. */
-  private def normKey(p: String): String =
-    p.replaceFirst("^[a-zA-Z0-9+.-]+:/+", "/")
 
   /** Open one written parquet file and return (path, length, rows). */
   private def statAndCount(dir: Path, fs: FileSystem,
@@ -178,28 +169,11 @@ object IcebergDeletes {
       if (specEvolved) Map(Seq.empty[Option[Any]] -> 0)
       else live.map(_._1.partitionValues).distinct.zipWithIndex.toMap
 
-    // one scan + identity restore per SPEC group (a column that is
-    // dir-encoded under one spec is physical under another), routed
-    // through the shared id-resolving scanDataFiles — a plain
-    // inference read would surface RENAMED columns under their old
-    // physical names on pre-rename files, null-fill the predicate and
-    // silently SKIP rows that should be deleted (readSnapshot and
-    // both compactions already scan this way)
-    val enriched = live.groupBy(_._1.specId).toSeq.sortBy(_._1).map {
-      case (sid, lf) =>
-        restoreIdentityColumnsFor(spark,
-          scanDataFiles(spark, table, lf.map(_._1.path), sid,
-            withRowMeta = true)
-            .withColumn(RowMetaFileCol, norm(col(RowMetaFileCol))),
-          table, partitionFieldsOf(table, sid),
-          dirEncodedIdentityCols(table, sid),
-          lf.map(f => (f._1.path, f._1.partitionValues)),
-          castToDeclared = specEvolved)
-    // allowMissingColumns: un-evolved tables read by inference, where
-    // groups can differ in later-added columns (predicates over them
-    // null-fill — exactly the added-column read semantics); evolved
-    // groups all surface the full current schema
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
+    // the shared id-resolving scan: a plain inference read would
+    // surface RENAMED columns under their old physical names on
+    // pre-rename files, null-fill the predicate and silently SKIP rows
+    // that should be deleted
+    val enriched = scanLiveFiles(spark, table, live.map(_._1), withRowMeta = true)
     val matched = resolveFileRefs(spark, live, specEvolved, partTuples,
       enriched.filter(predicate).select(
         col("__graft_file").as("__graft_key"),
@@ -315,14 +289,13 @@ object IcebergDeletes {
         // task, so partitionBy writes ONE file per ordinal; the sort
         // keeps the spec's (file_path, pos) order inside each file.
         val base = new Path(tablePath, s"deletes/pos-$newSeq")
-        withFieldIdWrite(spark) {
-          matched.select(col("file_path").as("file_path", fpMeta),
-              col("pos").as("pos", posMeta), col("__part"))
-            .repartition(col("__part"))
-            .sortWithinPartitions("__part", "file_path", "pos")
-            .write.mode("overwrite").partitionBy("__part")
-            .parquet(base.toString)
-        }
+        requireFieldIdWrite(spark)
+        matched.select(col("file_path").as("file_path", fpMeta),
+            col("pos").as("pos", posMeta), col("__part"))
+          .repartition(col("__part"))
+          .sortWithinPartitions("__part", "file_path", "pos")
+          .write.mode("overwrite").partitionBy("__part")
+          .parquet(base.toString)
         perPart.toSeq.sortBy(_._1).map { case (ord, nRows) =>
           val dir = new Path(base, s"__part=$ord")
           val (p, len, n) = statAndCount(dir, fs, conf)
@@ -459,11 +432,10 @@ object IcebergDeletes {
         .get("graft.rowlevel.eq-delete-keys-per-file", "1000000").toLong
       val nFiles = math.max(1L, math.min((n + target - 1) / target,
         spark.sparkContext.defaultParallelism.toLong)).toInt
-      withFieldIdWrite(spark) {
-        distinctKeys.repartition(nFiles, keyCols.map(col): _*)
-          .sortWithinPartitions(keyCols.map(col): _*)
-          .write.mode("overwrite").parquet(delDir.toString)
-      }
+      requireFieldIdWrite(spark)
+      distinctKeys.repartition(nFiles, keyCols.map(col): _*)
+        .sortWithinPartitions(keyCols.map(col): _*)
+        .write.mode("overwrite").parquet(delDir.toString)
       val infos = fs.listStatus(delDir)
         .filter(_.getPath.getName.endsWith(".parquet"))
         .sortBy(_.getPath.getName).toSeq.flatMap { st =>
@@ -652,16 +624,15 @@ object IcebergDeletes {
     // spec's per-file sort-order id claims — compactDataFiles' bins
     // carry the same semantics)
     val base = new Path(tablePath, s"data/rewrite-$newSeq")
-    withFieldIdWrite(spark) {
-      withPart.select(keepCols.map(col) ++ Seq(col("__part"),
-          pmod(xxhash64(keepCols.map(col): _*), col("__nsub"))
-            .cast("int").as("__sub")): _*)
-        .repartition(col("__part"), col("__sub"))
-        .sortWithinPartitions(
-          (Seq("__part", "__sub") ++ sortCols).map(col): _*)
-        .write.mode("overwrite").partitionBy("__part", "__sub")
-        .parquet(base.toString)
-    }
+    requireFieldIdWrite(spark)
+    withPart.select(keepCols.map(col) ++ Seq(col("__part"),
+        pmod(xxhash64(keepCols.map(col): _*), col("__nsub"))
+          .cast("int").as("__sub")): _*)
+      .repartition(col("__part"), col("__sub"))
+      .sortWithinPartitions(
+        (Seq("__part", "__sub") ++ sortCols).map(col): _*)
+      .write.mode("overwrite").partitionBy("__part", "__sub")
+      .parquet(base.toString)
     val rewritten = partTuples.zipWithIndex.flatMap { case (tuple, ord) =>
       (0 until nSubOf(tuple)).flatMap { sub =>
         val dir = new Path(base, s"__part=$ord/__sub=$sub")
@@ -859,16 +830,15 @@ object IcebergDeletes {
             .select(outCols :+ col("__part"): _*)
         }
       val base = new Path(tablePath, s"data/rewrite-$newSeq")
-      withFieldIdWrite(spark) {
-        withPart
-          .withColumn("__sub",
-            pmod(xxhash64(outNames.map(col): _*), lit(nSub)).cast("int"))
-          .repartition(col("__part"), col("__sub"))
-          .sortWithinPartitions(
-            (Seq("__part", "__sub") ++ sortCols).map(col): _*)
-          .write.mode("overwrite").partitionBy("__part", "__sub")
-          .parquet(base.toString)
-      }
+      requireFieldIdWrite(spark)
+      withPart
+        .withColumn("__sub",
+          pmod(xxhash64(outNames.map(col): _*), lit(nSub)).cast("int"))
+        .repartition(col("__part"), col("__sub"))
+        .sortWithinPartitions(
+          (Seq("__part", "__sub") ++ sortCols).map(col): _*)
+        .write.mode("overwrite").partitionBy("__part", "__sub")
+        .parquet(base.toString)
       val rewritten = tuples.toSeq.zipWithIndex.flatMap { case (row, ord) =>
         (0 until nSub).flatMap { sub =>
           val dir = new Path(base, s"__part=$ord/__sub=$sub")

@@ -160,10 +160,9 @@ object IcebergMaintenance {
           math.ceil(totalBytes.toDouble / targetBytes).toInt)
         val df = scanDataFiles(spark, table, fsOfPart.map(_._1.path), sid)
         // keep field ids in rewritten files — evolved tables read by id
-        IcebergSnapshot.withFieldIdWrite(spark) {
-          graft.operators.Layout.zorderLayout(df, aCol, bCol, nFiles)
-            .write.mode("overwrite").parquet(dir.toString)
-        }
+        IcebergSnapshot.requireFieldIdWrite(spark)
+        graft.operators.Layout.zorderLayout(df, aCol, bCol, nFiles)
+          .write.mode("overwrite").parquet(dir.toString)
         fs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet"))
           .sortBy(_.getPath.getName).flatMap { st =>
             val reader = org.apache.parquet.hadoop.ParquetFileReader.open(

@@ -698,7 +698,10 @@ object IcebergSnapshot {
     * `getOffset` while a commit lands — only ever sees a complete
     * value; the residual races are the not-yet-renamed window on
     * non-POSIX stores and pre-atomic-writer tables, so an absent or
-    * non-numeric read still retries briefly before propagating. A
+    * non-numeric read still retries briefly before propagating, as
+    * does a ChecksumException: a checksummed filesystem renames the
+    * hint and its `.crc` sidecar separately, and a read between the
+    * two pairs the new hint with the old checksum. A
     * genuinely missing table rethrows the original
     * FileNotFoundException (callers' bootstrap contract). */
   private[sources] def readVersionHint(metadataDir: Path,
@@ -707,7 +710,8 @@ object IcebergSnapshot {
     var attempt = 0
     while (true) {
       val raw = try readText(p, conf).trim catch {
-        case e: java.io.FileNotFoundException =>
+        case e @ (_: java.io.FileNotFoundException |
+            _: org.apache.hadoop.fs.ChecksumException) =>
           attempt += 1
           if (attempt >= 10) throw e
           Thread.sleep(2)
@@ -837,6 +841,23 @@ object IcebergSnapshot {
   private[sources] val RowMetaFileCol = "__graft_file"
   private[sources] val RowMetaPosCol = "__graft_pos"
 
+  private val SchemePrefix = "^[a-zA-Z0-9+.-]+:/+"
+
+  /** Scheme-stripped path key ("file:/x", "file:///x" and "/x" all key
+    * as "/x"), the form [[RowMetaFileCol]] carries; [[normPath]] is its
+    * column twin. No %XX decoding, so both agree byte for byte. */
+  private[sources] def normKey(p: String): String =
+    p.replaceFirst(SchemePrefix, "/")
+  private[sources] def normPath(c: org.apache.spark.sql.Column)
+      : org.apache.spark.sql.Column =
+    org.apache.spark.sql.functions.regexp_replace(c, SchemePrefix, "/")
+
+  /** The [[normKey]] that `_metadata.file_path` and `input_file_name`
+    * take for the file a manifest records as `p`: Spark surfaces the
+    * URI form, which escapes what the Hadoop path string keeps (a
+    * space as %20, a '%' as %25). */
+  private def scanKey(p: String): String = normKey(new Path(p).toUri.toString)
+
   /** Slash-count-insensitive path key: "file:/x" (Hadoop Path) and
     * "file:///x" (`input_file_name`/`_metadata.file_path`) both
     * normalize to "/x". */
@@ -851,22 +872,12 @@ object IcebergSnapshot {
     * values: ONE broadcast file→values map keyed by `input_file_name`
     * — O(1) plan depth and one broadcast at any file count (a real
     * Iceberg scan does the same enrichment natively). Values come back
-    * in their original surface form (dates from epoch-day ints),
-    * string-typed like Hive dir inference. */
-  private[sources] def restoreIdentityColumns(
-      spark: org.apache.spark.sql.SparkSession,
-      base: org.apache.spark.sql.DataFrame, table: TableDef,
-      files: Seq[(String, Seq[Option[Any]])]): org.apache.spark.sql.DataFrame =
-    restoreIdentityColumnsFor(spark, base, table, partitionFields(table),
-      dirEncodedIdentityCols(table, IcebergMetadata.defaultSpecIdOf(table)),
-      files, castToDeclared = false)
-
-  /** [[restoreIdentityColumns]] for an explicit spec's fields (the
-    * per-spec-group form evolved reads use): `pf` and `dirEncoded`
-    * describe the GROUP's spec, `files` its (path → values) rows, and
-    * `castToDeclared` casts restored columns to the table's declared
-    * Spark types so unions across spec groups type-align. */
-  private[sources] def restoreIdentityColumnsFor(
+    * in their original surface form (dates from epoch-day ints). `pf`
+    * and `dirEncoded` describe the scanned files' spec, `files` their
+    * (path → values) rows; `castToDeclared` casts restored columns to
+    * the table's declared Spark types so unions across spec groups
+    * type-align, else they stay string-typed like Hive dir inference. */
+  private def restoreIdentityColumnsFor(
       spark: org.apache.spark.sql.SparkSession,
       base: org.apache.spark.sql.DataFrame, table: TableDef,
       pf: Seq[(String, String, String)], dirEncoded: Set[String],
@@ -887,7 +898,7 @@ object IcebergSnapshot {
     val idxAndType = identity.map(n =>
       n -> pf.indexWhere(_._1 == n)).map { case (n, i) => (n, i, pf(i)._2) }
     val valueOf: Map[String, Array[String]] = files.map { case (p, vals) =>
-      pathKey(p) -> idxAndType.map { case (_, idx, itype) =>
+      scanKey(p) -> idxAndType.map { case (_, idx, itype) =>
         vals(idx).map(surface(itype, _)).orNull
       }.toArray
     }.toMap
@@ -895,14 +906,14 @@ object IcebergSnapshot {
     identity.zipWithIndex.foldLeft(base) { case (acc, (name, pos)) =>
       val restore = org.apache.spark.sql.functions.udf((fn: String) =>
         if (fn == null) null
-        else bc.value.get(pathKey(fn)).map(_(pos)).orNull)
+        else bc.value.get(fn).map(_(pos)).orNull)
       // cross-spec unions need the DECLARED type: a column dir-encoded
       // (string surface) under this spec can be physical (e.g. bigint,
       // date) under another, and Spark's union type promotion would
       // otherwise silently widen the whole column to string — feeding
       // strings into bucket-transform tuple computation downstream.
       // Legacy single-spec reads keep the Hive-style string surface.
-      val restored = restore(input_file_name())
+      val restored = restore(normPath(input_file_name()))
       val typed =
         if (castToDeclared)
           declared.get(name).fold(restored)(t => restored.cast(t))
@@ -956,24 +967,6 @@ object IcebergSnapshot {
         }
     }
 
-  /** Time-travel read: the DataFrame of EXACTLY the rows reachable
-    * from one snapshot — current by default, or any ancestor by id —
-    * resolved by walking version-hint → metadata → manifest list →
-    * manifests, the same chain an Iceberg runtime walks. Makes the
-    * committed history usable from plain Spark (no Iceberg jar):
-    * `readSnapshot(spark, path, Some(snap1))` reads the table as it
-    * was before later increments.
-    *
-    * Row-level deletes (v2 merge-on-read) are applied per the spec's
-    * sequence rules: a position delete file removes rows of data files
-    * with dataSeq ≤ deleteSeq (matched on (file, row ordinal) via
-    * Spark's `_metadata.row_index`); an equality delete file removes
-    * rows of STRICTLY older data files (dataSeq < deleteSeq) matching
-    * its key columns under null-safe equality. Data files are grouped
-    * by data sequence number so each group anti-joins exactly the
-    * delete files that apply to it — plan depth is bounded by the
-    * number of distinct sequence numbers, and each anti-join's right
-    * side is the (small) delete-file scan, so Spark broadcasts it. */
   /** Scan a set of DATA FILES under the table's CURRENT schema — the
     * one scan every reader (snapshot read, both compactions) must
     * share. Un-evolved tables use the inferred-schema read (their
@@ -1080,13 +1073,15 @@ object IcebergSnapshot {
   /** Zero rows under the SAME column shape a non-empty read produces
     * (physical columns in declared order, dir-encoded identity columns
     * restored LAST — string-surfaced until specs have evolved,
-    * declared-typed after), so downstream unions and positional diffs
+    * declared-typed after; then the row-meta columns if asked), so
+    * downstream unions and positional diffs
     * are insensitive to the table being empty. Reached by genuinely
     * empty snapshots (delete every row, then compact the deletes in —
     * the randomized lifecycle harness's fourth find) AND by pruned
     * reads whose predicate skips every file. */
   private def emptyShapeRead(spark: org.apache.spark.sql.SparkSession,
-      table: TableDef): org.apache.spark.sql.DataFrame = {
+      table: TableDef, withRowMeta: Boolean): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField}
     val sid = IcebergMetadata.defaultSpecIdOf(table)
     val dirEncoded = dirEncodedIdentityCols(table, sid)
     val identity = partitionFieldsOf(table, sid)
@@ -1097,115 +1092,143 @@ object IcebergSnapshot {
       declared.fields.filterNot(f => identity.contains(f.name)) ++
         identity.map { n =>
           val f = declared.fields.find(_.name == n).get
-          if (castDecl) f.copy(nullable = true)
-          else org.apache.spark.sql.types.StructField(n,
-            org.apache.spark.sql.types.StringType)
-        })
+          if (castDecl) f.copy(nullable = true) else StructField(n, StringType)
+        } ++ (if (!withRowMeta) Nil
+          else Seq(StructField(RowMetaFileCol, StringType),
+            StructField(RowMetaPosCol, LongType))))
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], shape)
   }
 
-  /** Read a snapshot's net rows (all row-level deletes applied).
+  /** Scan live data files: one [[scanDataFiles]] scan plus identity
+    * restore per partition spec (a column dir-encoded under one spec
+    * is physical under another), unioned by name. Un-evolved tables
+    * read by inference, so spec groups can differ in later-added
+    * columns; those read as NULL. With `withRowMeta` every row also
+    * carries its [[normKey]]-normalized data file path
+    * ([[RowMetaFileCol]]) and in-file position ([[RowMetaPosCol]]). */
+  private[sources] def scanLiveFiles(spark: org.apache.spark.sql.SparkSession,
+      table: TableDef, files: Seq[DataFileInfo],
+      withRowMeta: Boolean): org.apache.spark.sql.DataFrame =
+    files.groupBy(_.specId).toSeq.sortBy(_._1).map { case (sid, fs) =>
+      val scan = scanDataFiles(spark, table, fs.map(_.path), sid,
+        withRowMeta = withRowMeta)
+      // identity restore rides input_file_name, so it runs on the
+      // single-source scan, before any join enters the plan
+      restoreIdentityColumnsFor(spark,
+        if (withRowMeta) scan.withColumn(RowMetaFileCol,
+          normPath(org.apache.spark.sql.functions.col(RowMetaFileCol)))
+        else scan,
+        table, partitionFieldsOf(table, sid),
+        dirEncodedIdentityCols(table, sid),
+        fs.map(f => (f.path, f.partitionValues)),
+        castToDeclared = table.partitionSpecs.nonEmpty)
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
+
+  /** Time-travel read: the net rows reachable from one snapshot —
+    * current by default, or any ancestor by id — resolved by walking
+    * version-hint → metadata → manifest list → manifests, the same
+    * chain an Iceberg runtime walks. Makes the committed history usable
+    * from plain Spark (no Iceberg jar): `readSnapshot(spark, path,
+    * table, Some(snap1))` reads the table as it was before later
+    * increments.
+    *
+    * The rows are those of the live data files that survive file-level
+    * `pruning` ([[IcebergPruning.fileMayMatch]]), with every row-level
+    * delete (v2 merge-on-read) applied under the spec's sequence
+    * rules. The plan's shape depends only on the table's partition
+    * specs and delete kinds, never on how many commits it has:
+    *
+    *  - one data scan per partition spec ([[scanLiveFiles]]). When
+    *    deletes are live, each row carries its (file, pos) identity
+    *    (`_metadata.row_index` for pos) and its data sequence number,
+    *    joined from a small (file key, data_seq) frame built from the
+    *    manifest entries;
+    *  - one left-anti join for all position delete files: the row's
+    *    (file, pos) equals a deleted one and data_seq ≤ delete_seq;
+    *  - one left-anti join per equality-key set: null-safe key equality
+    *    and data_seq < delete_seq (equality deletes remove rows of
+    *    STRICTLY older files). That side is reduced to each key's
+    *    largest delete sequence number, so it is no larger than the
+    *    set of distinct deleted keys.
+    *
+    * Delete rows take their delete file's sequence number from a
+    * broadcast lookup keyed by `_metadata.file_path`. Spark's
+    * broadcast threshold decides whether each join broadcasts or
+    * shuffles. A table without deletes takes the same path with no
+    * joins at all.
+    *
     * With `keepRowMeta` the result ALSO carries [[RowMetaFileCol]] /
-    * [[RowMetaPosCol]] — each surviving row's scheme-normalized data
-    * file path and in-file row position, the (file, pos) identity the
-    * row-level write faces (SQL UPDATE/MERGE) target with position
-    * deletes. Meta columns ride the scan (no extra pass). */
+    * [[RowMetaPosCol]], the (file, pos) identity the row-level write
+    * faces (SQL UPDATE/MERGE) target with position deletes. */
   def readSnapshot(spark: org.apache.spark.sql.SparkSession, tablePath: String,
       table: TableDef, snapshotId: Option[Long] = None,
       pruning: Seq[IcebergPruning.ColumnBound] = Nil,
       keepRowMeta: Boolean = false): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, regexp_replace}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, max, udf}
+    import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
     val (_, listRows) = resolveSnapshot(tablePath, table, snapshotId, conf)
     // live data files (stats decoded — the pruning signals) with their
-    // data sequence numbers; partition values are shaped by each
-    // MANIFEST's spec
-    val allFiles = liveFilesWithSeq(listRows, table, conf)
-    // file-level predicate pruning: drop files whose recorded bounds /
-    // partition values prove no row can match (IcebergPruning) — the
-    // 100 TB lever: a selective read opens only overlapping files
-    val files = allFiles.filter { case (f, _) =>
+    // data sequence numbers; a selective read opens only the files
+    // whose bounds / partition values may match
+    val files = liveFilesWithSeq(listRows, table, conf).filter { case (f, _) =>
       pruning.forall(b => IcebergPruning.fileMayMatch(table, f, b))
     }
-    def withResidual(df: org.apache.spark.sql.DataFrame)
-        : org.apache.spark.sql.DataFrame =
-      if (pruning.isEmpty) df
-      else df.where(IcebergPruning.residualFilter(df, table, pruning))
-    if (files.isEmpty) {
-      val empty = emptyShapeRead(spark, table)
-      return if (!keepRowMeta) empty
-      else empty
-        .withColumn(RowMetaFileCol, org.apache.spark.sql.functions
-          .lit(null).cast(org.apache.spark.sql.types.StringType))
-        .withColumn(RowMetaPosCol, org.apache.spark.sql.functions
-          .lit(null).cast(org.apache.spark.sql.types.LongType))
+    if (files.isEmpty) return emptyShapeRead(spark, table, keepRowMeta)
+    val DataSeqCol = "__graft_data_seq"
+    val DeleteSeqCol = "__graft_delete_seq"
+    val FileKeyCol = "__graft_file_key"
+    // a delete file scan with each row's delete sequence number. Not
+    // a join: Spark sizes a join's output as the product of its
+    // inputs, so a joined delete side would stop broadcasting once a
+    // few dozen delete files are live, and the anti-join would shuffle
+    // the whole table. A lookup keeps the scan's own size estimate.
+    def deleteScan(dels: Seq[DeleteFileRef], cols: Seq[org.apache.spark.sql.Column])
+        : DataFrame = {
+      val seqOf = spark.sparkContext.broadcast(
+        dels.map(d => scanKey(d.path) -> d.seq).toMap)
+      val deleteSeq = udf((key: String) => seqOf.value(key))
+      spark.read.parquet(dels.map(_.path): _*).select(cols :+
+        deleteSeq(normPath(col("_metadata.file_path"))).as(DeleteSeqCol): _*)
     }
     val deletes = liveDeleteFiles(listRows, conf)
-    // one scan + identity restore per SPEC group: a column that is
-    // directory-encoded under one spec is physical under another, so
-    // mixed-spec files can never share a scan; restored columns cast
-    // to the declared type once specs have evolved, so the cross-spec
-    // union type-aligns (legacy single-spec reads keep the string
-    // surface Hive-style dir inference produces)
-    def scanRestored(sid: Int, fs: Seq[(DataFileInfo, Long)],
-        withRowMeta: Boolean): org.apache.spark.sql.DataFrame =
-      restoreIdentityColumnsFor(spark,
-        scanDataFiles(spark, table, fs.map(_._1.path), sid,
-          withRowMeta = withRowMeta),
-        table, partitionFieldsOf(table, sid),
-        dirEncodedIdentityCols(table, sid),
-        fs.map(f => (f._1.path, f._1.partitionValues)),
-        castToDeclared = table.partitionSpecs.nonEmpty)
-    if (deletes.isEmpty) {
-      def norm0(c: org.apache.spark.sql.Column) =
-        regexp_replace(c, "^[a-zA-Z0-9+.-]+:/+", "/")
-      withResidual(files.groupBy(_._1.specId).toSeq.sortBy(_._1)
-        .map { case (sid, fs) =>
-          val df = scanRestored(sid, fs, withRowMeta = keepRowMeta)
-          if (keepRowMeta) df.withColumn(RowMetaFileCol, norm0(col(RowMetaFileCol)))
-          else df
-        }
-        .reduce(_ unionByName _))
-    } else {
-      val colOfId = table.fieldIdOf.map(_.swap)
-      def norm(c: org.apache.spark.sql.Column) =
-        regexp_replace(c, "^[a-zA-Z0-9+.-]+:/+", "/")
-      val groups = files.groupBy(f => (f._2, f._1.specId)).toSeq.sortBy(_._1)
-      withResidual(groups.map { case ((dataSeq, sid), fs) =>
-        // identity restore rides input_file_name, so it must happen
-        // on the single-source scan BEFORE any join enters the plan;
-        // the (file, pos) key is materialized inside the scan (see
-        // scanDataFiles' withRowMeta note) and normalized here
-        var df = scanRestored(sid, fs, withRowMeta = true)
-          .withColumn(RowMetaFileCol, norm(col(RowMetaFileCol)))
-        val pos = deletes.filter(d => d.content == 1 && d.seq >= dataSeq)
-        if (pos.nonEmpty) {
-          val del = spark.read.parquet(pos.map(_.path): _*)
-            .select(norm(col("file_path")).as("__dfile"),
-              col("pos").as("__dpos"))
-          df = df.join(del,
-            df("__graft_file") === del("__dfile") &&
-              df("__graft_pos") === del("__dpos"), "left_anti")
-        }
-        // group equality deletes by key-column set so each set is
-        // one anti-join regardless of how many delete files carry it
-        val eqs = deletes.filter(d => d.content == 2 && d.seq > dataSeq)
-        for ((ids, dels) <- eqs.groupBy(_.equalityIds).toSeq.sortBy(_._1.mkString(","))) {
-          val keyCols = ids.map(colOfId)
-          val del = spark.read.parquet(dels.map(_.path): _*)
-            .select(keyCols.map(col): _*).distinct()
-          val cond = keyCols.map(k => df(k) <=> del(k)).reduce(_ && _)
-          df = df.join(del, cond, "left_anti")
-        }
-        if (keepRowMeta) df else df.drop("__graft_file", "__graft_pos")
-      }.reduce(_ unionByName _))
+    val scanned = scanLiveFiles(spark, table, files.map(_._1),
+      withRowMeta = keepRowMeta || deletes.nonEmpty)
+    var net =
+      if (deletes.isEmpty) scanned
+      else {
+        val seqOf = files.map { case (f, seq) => (scanKey(f.path), seq) }.distinct
+          .toDF(FileKeyCol, DataSeqCol)
+        scanned.join(seqOf, scanned(RowMetaFileCol) === seqOf(FileKeyCol))
+          .drop(FileKeyCol)
+      }
+    val posDeletes = deletes.filter(_.content == 1)
+    if (posDeletes.nonEmpty) {
+      val del = deleteScan(posDeletes, Seq(
+        normPath(col("file_path")).as("__graft_dfile"), col("pos").as("__graft_dpos")))
+      net = net.join(del, net(RowMetaFileCol) === del("__graft_dfile") &&
+        net(RowMetaPosCol) === del("__graft_dpos") &&
+        net(DataSeqCol) <= del(DeleteSeqCol), "left_anti")
     }
+    val colOfId = table.fieldIdOf.map(_.swap)
+    val eqSets = deletes.filter(_.content == 2).groupBy(_.equalityIds)
+    for ((ids, dels) <- eqSets.toSeq.sortBy(_._1.mkString(","))) {
+      val keyCols = ids.map(colOfId)
+      val del = deleteScan(dels, keyCols.map(col))
+        .groupBy(keyCols.map(col): _*).agg(max(DeleteSeqCol).as(DeleteSeqCol))
+      val cond = keyCols.map(k => net(k) <=> del(k)).reduce(_ && _) &&
+        net(DataSeqCol) < del(DeleteSeqCol)
+      net = net.join(del, cond, "left_anti")
+    }
+    net = net.drop(DataSeqCol)
+    val residual =
+      if (pruning.isEmpty) net
+      else net.where(IcebergPruning.residualFilter(net, table, pruning))
+    if (keepRowMeta) residual else residual.drop(RowMetaFileCol, RowMetaPosCol)
   }
 
-  /** Write metadata version N+1 carrying `snapshots` and advance the
-    * version hint — the shared tail of every commit. */
-  /** Named refs beyond `main`: (name, snapshot-id, type) triples. */
   /** The MAIN head recorded in a metadata document, if any — with
     * write-audit-publish in play the published head need not be the
     * snapshots-array tail (a staged branch snapshot trails it), so
@@ -1319,6 +1342,7 @@ object IcebergSnapshot {
       removeProperties = props.collect { case (k, None) => k }.toSet)
   }
 
+  /** Named refs beyond `main`: (name, snapshot-id, type) triples. */
   private[sources] def parseRefs(metaJson: String): Seq[(String, Long, String)] =
     (JsonMethods.parse(metaJson) \ "refs") match {
       case JObject(fields) => fields.collect {
@@ -1329,6 +1353,8 @@ object IcebergSnapshot {
       case _ => Nil
     }
 
+  /** Write metadata version N+1 carrying `snapshots` and advance the
+    * version hint — the shared tail of every commit. */
   private[sources] def writeNewMetadataVersion(table: TableDef, tablePath: String,
       metadataDir: Path, fs: FileSystem, version: Int,
       snapshots: Seq[IcebergMetadata.SnapshotMeta],
@@ -1440,29 +1466,20 @@ object IcebergSnapshot {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Run `body` with `spark.sql.parquet.fieldId.write.enabled` forced
-    * on, restoring the session's prior setting after — rewritten files
-    * must keep their field ids (evolved tables read by id), but a
-    * LIBRARY write path must not leave a session-global flag flipped
-    * behind it (the conf is not honored as a per-write option, so
-    * save/restore is the only non-leaking way to scope it). */
-  private[sources] def withFieldIdWrite[T](
-      spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
+  /** Fail before a write when the session has turned
+    * `spark.sql.parquet.fieldId.write.enabled` off: evolved tables read
+    * by field id, so a data or delete file written without ids would
+    * read back as NULL columns. The key defaults on; the session's
+    * setting is only read, never changed. */
+  private[graft] def requireFieldIdWrite(
+      spark: org.apache.spark.sql.SparkSession): Unit = {
     val key = "spark.sql.parquet.fieldId.write.enabled"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try body
-    finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    if (!spark.conf.get(key, "true").trim.toBoolean)
+      throw new IllegalStateException(
+        s"$key is false in this session; graft-iceberg writes need parquet " +
+          "field ids (evolved tables read by id), so unset it or set it to true")
   }
 
-  /** The live data files of the current snapshot, with each file's
-    * origin data sequence number (explicit on EXISTING/DELETED rows,
-    * inherited from the manifest-list row on ADDED rows). Stats maps
-    * are decoded back from the manifest so a rewrite can re-list
-    * files without re-reading footers. */
   /** Decode one manifest `data_file` record back to [[DataFileInfo]]
     * (stats maps included) — shared by [[liveFilesWithSeq]] and the
     * cherry-pick re-commit, so a rewrite can re-list files without
@@ -1496,6 +1513,11 @@ object IcebergSnapshot {
       specId = specId)
   }
 
+  /** The live data files of the current snapshot, with each file's
+    * origin data sequence number (explicit on EXISTING/DELETED rows,
+    * inherited from the manifest-list row on ADDED rows). Stats maps
+    * are decoded back from the manifest so a rewrite can re-list
+    * files without re-reading footers. */
   private[sources] def liveFilesWithSeq(manifestListRows: Seq[GenericRecord],
       table: TableDef, conf: Configuration): Seq[(DataFileInfo, Long)] = {
     manifestListRows.filter(_.get("content").asInstanceOf[Int] == 0).flatMap { m =>
@@ -1594,9 +1616,8 @@ object IcebergSnapshot {
         else one.sortWithinPartitions(
           sortCols.map(org.apache.spark.sql.functions.col): _*)
       // keep field ids in rewritten files — evolved tables read by id
-      withFieldIdWrite(spark) {
-        ordered.write.mode("overwrite").parquet(dir.toString)
-      }
+      requireFieldIdWrite(spark)
+      ordered.write.mode("overwrite").parquet(dir.toString)
       val st = fs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet")).head
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, conf))
       val (nRows, stats) =

@@ -73,9 +73,6 @@ private[v2] object GraftSpj {
 
   private val BucketN = """bucket\[(\d+)\]""".r
 
-  private[v2] def normKey(p: String): String =
-    p.replaceFirst("^[a-zA-Z0-9+.-]+:/+", "/")
-
   /** Catalyst internal form of a manifest partition value under the
     * column's declared Spark type — what partition-key rows and
     * injected per-file constants are made of. */
@@ -423,7 +420,7 @@ private[v2] class GraftBucketReaderFactory(
     // locality real Iceberg readers rely on
     val posEntries = part.posDeletes.iterator.flatMap { case (dp, dlen, dseq) =>
       posDeleteFunc(pf(dp, dlen, Array.empty)).map(r =>
-        (GraftSpj.normKey(r.getUTF8String(0).toString), r.getLong(1), dseq))
+        (IcebergSnapshot.normKey(r.getUTF8String(0).toString), r.getLong(1), dseq))
     }.toArray
     val posByPath = posEntries.groupBy(_._1)
     // EQUALITY delete keys: per id-set, per delete-sequence, a hash
@@ -459,7 +456,7 @@ private[v2] class GraftBucketReaderFactory(
       // with dataSeq ≤ deleteSeq; an equality delete to STRICTLY older
       // files (dataSeq < deleteSeq)
       val dead = new java.util.HashSet[java.lang.Long]()
-      posByPath.getOrElse(GraftSpj.normKey(path), Array.empty)
+      posByPath.getOrElse(IcebergSnapshot.normKey(path), Array.empty)
         .foreach { case (_, pos, dseq) =>
           if (dseq >= fseq) { dead.add(pos); () }
         }

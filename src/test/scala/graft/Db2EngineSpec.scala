@@ -123,6 +123,31 @@ class Db2EngineSpec extends AnyFunSuite {
     assert(r.warnings.exists(_.contains("unknown table: S.MISSING")))
   }
 
+  test("parser: ALTER TABLE picks the first case-insensitive match in script order") {
+    val ddl =
+      """CREATE TABLE S1.ORD (A INT);
+        |CREATE TABLE s2.ord (B INT);
+        |CREATE TABLE Ord (C INT);
+        |ALTER TABLE S2.ORD ADD CONSTRAINT PK_2 PRIMARY KEY (B);
+        |ALTER TABLE oRd ADD CONSTRAINT PK_ANY PRIMARY KEY (A);
+        |ALTER TABLE ORD PARTITION BY RANGE (A);
+        |ALTER TABLE S3.Ord ADD CONSTRAINT PK_3 PRIMARY KEY (C);
+        |""".stripMargin
+    val r = Db2Parser.parse(ddl)
+    def pkOf(i: Int) = r.tables(i).constraints
+      .filter(_.ctype == "PRIMARY KEY").flatMap(_.name)
+    assert(r.tables.map(_.name) === Vector("ORD", "ord", "Ord"))
+    // schema named: only the table whose schema equals it, any case
+    assert(pkOf(1) === Seq("PK_2"))
+    // no schema named: the first table of that name, whatever its schema
+    assert(pkOf(0) === Seq("PK_ANY"))
+    assert(r.tables(0).partition.map(_.ptype) === Some("RANGE"))
+    assert(r.tables(1).partition.isEmpty && r.tables(2).partition.isEmpty)
+    // a schema named against a table without one never matches
+    assert(pkOf(2).isEmpty)
+    assert(r.warnings === Vector("ALTER TABLE references unknown table: S3.Ord"))
+  }
+
   // ---------------------------------------------------------------- mapper
 
   test("mapper rule table: boundaries and statuses (M1-M17)") {

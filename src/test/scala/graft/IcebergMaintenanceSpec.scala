@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.SchemaTranslator
 import graft.parse.Db2Parser
-import graft.sources.{IcebergInspect, IcebergMaintenance, IcebergSnapshot}
+import graft.sources.{IcebergDeletes, IcebergInspect, IcebergMaintenance, IcebergSnapshot}
 
 /** Orphan-file removal: unreferenced files older than the cutoff are
   * swept, everything any snapshot of the current metadata references
@@ -402,5 +402,33 @@ class IcebergMaintenanceSpec extends AnyFunSuite {
     assert(IcebergSnapshot.readSnapshot(spark, out, table)
       .select("K", "N").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap === byK)
+  }
+
+  test("writes leave the field-id write setting alone, and refuse it off") {
+    val key = "spark.sql.parquet.fieldId.write.enabled"
+    // a fresh session of the same context: the key is unset there
+    val s = spark.newSession()
+    val table = mkTable("FIDW")
+    def rows(ks: Seq[Long]) = s.createDataFrame(df(ks).rdd, df(ks).schema)
+    val out = java.nio.file.Files.createTempDirectory("iceberg_fidw").toString
+    assert(!s.conf.getAll.contains(key))
+    val unset = s.conf.getOption(key)
+    SchemaTranslator.migrateTable(rows(1L to 30L), table, out)
+    SchemaTranslator.mergeUpsert(rows(1L to 5L), table, out, keyCols = Seq("K"))
+    SchemaTranslator.deleteWhere(s, table, out,
+      org.apache.spark.sql.functions.col("K") === 7L)
+    IcebergDeletes.compactWithDeletes(s, table, out)
+    IcebergSnapshot.compactDataFiles(s, table, out, targetBytes = 1L << 20)
+    assert(!s.conf.getAll.contains(key))
+    assert(s.conf.getOption(key) === unset)
+    assert(IcebergSnapshot.readSnapshot(s, out, table).count() === 29L)
+
+    s.conf.set(key, "false")
+    val out2 = java.nio.file.Files.createTempDirectory("iceberg_fidw_off").toString
+    val e = intercept[IllegalStateException](
+      SchemaTranslator.migrateTable(rows(1L to 3L), table, out2))
+    assert(e.getMessage.contains(key))
+    assert(!new java.io.File(out2, "data").exists(),
+      "the refusal must come before any file is written")
   }
 }

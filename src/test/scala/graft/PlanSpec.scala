@@ -743,4 +743,67 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("SortMergeJoin"),
       "the <=numBuckets-row ratio table must never sort-merge:\n" + plan.take(2000))
   }
+
+  test("readSnapshot: the merge-on-read plan does not grow with CDC rounds") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    import org.apache.spark.sql.functions.col
+    import graft.api.SchemaTranslator
+    import graft.sources.IcebergSnapshot
+    val table = graft.parse.Db2Parser.parse(
+      "CREATE TABLE S.MOR (K BIGINT NOT NULL, N INTEGER);").tables.head
+    val out = java.nio.file.Files.createTempDirectory("plan_mor").toString
+    def rows(ks: Seq[Long], n: Int) =
+      spark.createDataFrame(ks.map(k => (k, n))).toDF("K", "N")
+    SchemaTranslator.migrateTable(rows(1L to 40L, 0), table, out)
+    // one CDC round: upsert two keys, delete one, append one
+    def cdcRound(r: Int): Unit = {
+      SchemaTranslator.mergeUpsert(rows(Seq(r.toLong, r + 10L), r), table, out,
+        keyCols = Seq("K"))
+      SchemaTranslator.deleteWhere(spark, table, out, col("K") === 20L + r)
+      SchemaTranslator.appendIncrement(rows(Seq(100L + r), r), table, out)
+    }
+    // (left-anti joins, parquet relations) of the optimized read plan
+    def shape(): (Int, Int) = {
+      val plan = IcebergSnapshot.readSnapshot(spark, out, table)
+        .queryExecution.optimizedPlan
+      (plan.collect { case j: Join if j.joinType == LeftAnti => j }.size,
+        plan.collect { case r: LogicalRelation => r }.size)
+    }
+    cdcRound(1)
+    val afterOne = shape()
+    (2 to 4).foreach(cdcRound)
+    val afterFour = shape()
+    assert(afterOne === afterFour,
+      "the read plan must depend on the table's specs and delete kinds only")
+    // one position-delete anti-join + one per equality-key set ({K})
+    assert(afterOne._1 <= 1 + 1, afterOne)
+    val net = IcebergSnapshot.readSnapshot(spark, out, table)
+      .select("K", "N").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val expected = ((1L to 40L).filterNot(k => k >= 21 && k <= 24).map { k =>
+      k -> (if (k <= 4) k.toInt else if (k >= 11 && k <= 14) (k - 10).toInt else 0)
+    } ++ (1 to 4).map(r => (100L + r) -> r)).toMap
+    assert(net === expected)
+  }
+
+  test("readSnapshot: file keys match paths Spark surfaces URI-escaped") {
+    import graft.api.SchemaTranslator
+    import graft.sources.IcebergSnapshot
+    val table = graft.parse.Db2Parser.parse(
+      """CREATE TABLE S.ESC (K BIGINT NOT NULL, V VARCHAR(10), N INTEGER)
+        |PARTITION BY RANGE (V);""".stripMargin).tables.head
+    // Spark surfaces this directory as "a%20b%25c" in _metadata.file_path
+    // and input_file_name, and the partition directory "V=x y" likewise
+    val out = java.nio.file.Files.createTempDirectory("plan_esc").toString + "/a b%c"
+    def rows(ks: Seq[Long], n: Int) = spark.createDataFrame(
+      ks.map(k => (k, if (k % 2 == 0) "x y" else "p%q", n))).toDF("K", "V", "N")
+    SchemaTranslator.migrateTable(rows(1L to 10L, 0), table, out)
+    SchemaTranslator.mergeUpsert(rows(Seq(1L, 2L), 5), table, out, keyCols = Seq("K"))
+    val net = IcebergSnapshot.readSnapshot(spark, out, table)
+      .select("K", "V", "N").collect()
+      .map(r => r.getLong(0) -> (r.getString(1), r.getInt(2))).toMap
+    assert(net === (1L to 10L).map(k =>
+      k -> (if (k % 2 == 0) "x y" else "p%q", if (k <= 2) 5 else 0)).toMap)
+  }
 }
