@@ -2,6 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.assess.Assessor
 import graft.convert.{Db2Renderer, RenderConfig}
@@ -45,9 +46,14 @@ final case class AssessRow(
   * scripts.
   *
   * Scale design (100 TB / 1000 executors):
-  *  - The unit of parallelism is one *script*: parse (a per-script
+  *  - The unit of parsing is one *script*: parse (a per-script
   *    sequential two-pass, as the semantics require) runs map-side with
   *    zero shuffle. Statement→table ordinals are stamped in-task.
+  *  - The unit of scheduling is a batch of scripts: [[readScripts]]
+  *    opens each file once and packs the corpus into one scan task per
+  *    core, or per `spark.sql.files.maxPartitionBytes` of script text
+  *    when that gives more. Tasks carry fixed costs (task binary,
+  *    generated projections) that a 4 KB script cannot amortize.
   *  - Rendering is a per-table map followed by ONE shuffle: the ordered
   *    string aggregation per script (`collect_list` of (pos, ddl) →
   *    `array_sort` → `concat_ws`), the Spark equivalent of DuckDB's
@@ -61,12 +67,53 @@ final case class AssessRow(
   */
 object Engine {
 
-  /** Read a directory (or glob) of DDL scripts, one row per file:
-    * (script_id, ddl). `wholetext` keeps statements that span lines
-    * intact; file paths give stable script ids. */
-  def readScripts(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("wholetext", "true").text(path)
-      .select(input_file_name().as("script_id"), col("value").as("ddl"))
+  /** Read a directory (or glob) of plain-text DDL scripts, one row per
+    * non-empty file: (script_id, ddl). `ddl` is the file's bytes as
+    * UTF-8 text, whole (statements span lines), byte for byte as
+    * written: CRLF and invalid UTF-8 bytes are kept. `script_id` is
+    * the file's URI (`file:///dir/a%20b.sql`). Zero-length files give
+    * no row.
+    *
+    * Scripts are read whole through `binaryFile`, so each file is
+    * opened once and never decompressed: a file named as compressed
+    * (`.gz`, `.bz2`, `.deflate`, `.zst`, `.lz4`, `.snappy`) fails the
+    * read with an error that names it.
+    *
+    * The scan is coalesced to max(`defaultParallelism`, ⌈script bytes /
+    * `spark.sql.files.maxPartitionBytes`⌉) tasks, sized from the file
+    * listing Spark already made; a scan with fewer partitions keeps
+    * them. Each script still parses on its own downstream. */
+  def readScripts(spark: SparkSession, path: String): DataFrame = {
+    val files = spark.read.format("binaryFile").load(path)
+    val bytes = files.queryExecution.analyzed.stats.sizeInBytes
+    val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
+    val byBytes = ((bytes + maxBytes - 1) / maxBytes).toInt
+    scriptRows(files).coalesce(
+      math.max(spark.sparkContext.defaultParallelism, byBytes))
+  }
+
+  /** `binaryFile`'s fixed schema, spelled out: streaming file sources
+    * refuse inference. */
+  private[graft] val BinaryFileSchema: StructType = StructType(Seq(
+    StructField("path", StringType),
+    StructField("modificationTime", TimestampType),
+    StructField("length", LongType),
+    StructField("content", BinaryType)))
+
+  // Hadoop's default codec extensions: the text reader decompressed
+  // these, so their raw bytes would parse silently to zero tables
+  private val CompressedSuffixes =
+    Seq(".gz", ".bz2", ".deflate", ".zst", ".lz4", ".snappy")
+
+  /** (script_id, ddl) from a batch or streaming `binaryFile` frame:
+    * the one projection behind [[readScripts]] and the DDL streams. */
+  private[graft] def scriptRows(files: DataFrame): DataFrame = {
+    val compressed = CompressedSuffixes.map(col("path").endsWith).reduce(_ || _)
+    files.select(input_file_name().as("script_id"),
+      when(compressed, raise_error(concat(lit("compressed DDL script "),
+        col("path"), lit(": scripts are read as plain text"))))
+        .otherwise(col("content").cast(StringType)).as("ddl"))
+  }
 
   /** Scripts from in-memory pairs (tests, demos, streaming batches). */
   def scriptsOf(spark: SparkSession, scripts: Seq[(String, String)]): DataFrame = {

@@ -60,8 +60,8 @@ object IcebergDeletes {
     (st.getPath, st.getLen, n)
   }
 
-  /** Resolve scan-surfaced (scheme-normalized) data-file keys in
-    * `df("__graft_key")` to their manifest-recorded path and
+  /** Resolve scan-surfaced (scheme-normalized, URI-escaped) data-file
+    * keys in `df("__graft_key")` to their manifest-recorded path and
     * delete-file partition ordinal, returning (file_path, pos, __part)
     * — file_path NULL where the key matches no live file. Bounded
     * tables resolve through a broadcast driver map; beyond
@@ -80,7 +80,7 @@ object IcebergDeletes {
       if (specEvolved) 0 else partTuples(f.partitionValues)
     if (live.size <= maxEntries) {
       val byKey = live.map { case (f, _) =>
-        normKey(f.path) -> ((f.path, ordOf(f)))
+        scanKey(f.path) -> ((f.path, ordOf(f)))
       }.toMap
       val bc = spark.sparkContext.broadcast(byKey)
       val toPath = udf((k: String) => bc.value.get(k).map(_._1).orNull)
@@ -89,7 +89,7 @@ object IcebergDeletes {
         toPart(col("__graft_key")).as("__part"))
     } else {
       val rows = live.map { case (f, _) =>
-        Row(normKey(f.path), f.path, ordOf(f))
+        Row(scanKey(f.path), f.path, ordOf(f))
       }
       val schema = StructType(Seq(
         StructField("__graft_key2", StringType),

@@ -855,8 +855,10 @@ object IcebergSnapshot {
   /** The [[normKey]] that `_metadata.file_path` and `input_file_name`
     * take for the file a manifest records as `p`: Spark surfaces the
     * URI form, which escapes what the Hadoop path string keeps (a
-    * space as %20, a '%' as %25). */
-  private def scanKey(p: String): String = normKey(new Path(p).toUri.toString)
+    * space as %20, a '%' as %25). Position delete files record the
+    * manifest form, so their `file_path` goes through here too. */
+  private[sources] def scanKey(p: String): String =
+    normKey(new Path(p).toUri.toString)
 
   /** Slash-count-insensitive path key: "file:/x" (Hadoop Path) and
     * "file:///x" (`input_file_name`/`_metadata.file_path`) both
@@ -1206,8 +1208,9 @@ object IcebergSnapshot {
       }
     val posDeletes = deletes.filter(_.content == 1)
     if (posDeletes.nonEmpty) {
+      val toScanKey = udf((p: String) => scanKey(p))
       val del = deleteScan(posDeletes, Seq(
-        normPath(col("file_path")).as("__graft_dfile"), col("pos").as("__graft_dpos")))
+        toScanKey(col("file_path")).as("__graft_dfile"), col("pos").as("__graft_dpos")))
       net = net.join(del, net(RowMetaFileCol) === del("__graft_dfile") &&
         net(RowMetaPosCol) === del("__graft_dpos") &&
         net(DataSeqCol) <= del(DeleteSeqCol), "left_anti")

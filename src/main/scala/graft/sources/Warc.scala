@@ -94,15 +94,8 @@ object Warc {
       maxBodyBytes: Int = 1 << 20,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    // binaryFile's fixed schema, spelled out: streaming file sources
-    // refuse inference
-    val binSchema = StructType(Seq(
-      StructField("path", StringType),
-      StructField("modificationTime", TimestampType),
-      StructField("length", LongType),
-      StructField("content", BinaryType)))
     val reader = spark.readStream.format("binaryFile")
-      .schema(binSchema)
+      .schema(graft.api.Engine.BinaryFileSchema)
       .option("pathGlobFilter", "*.warc*")
     maxFilesPerTrigger.foreach(n =>
       reader.option("maxFilesPerTrigger", n.toString))

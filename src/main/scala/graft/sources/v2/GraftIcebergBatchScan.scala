@@ -296,8 +296,11 @@ private[v2] class GraftIcebergBucketScan(spark: SparkSession,
     // shape — the reader function then yields ColumnarBatches and the
     // factory passes them through columnar (FileSourceScanExec's own
     // contract); injected identity constants ride the partition-value
-    // surface in both modes
-    val returningBatch = fmt.supportBatch(spark, outSchema)
+    // surface in both modes. Spark requires every input partition to
+    // agree, and a delete-carrying partition reads rows, so one such
+    // partition makes the whole scan row-wise
+    val returningBatch = fmt.supportBatch(spark, outSchema) &&
+      !partitions.exists(_.hasDeletes)
     val batchFunc = fmt.buildReaderWithPartitionValues(
       spark, dataSchema, partSchema, dataRequired,
       pushed.toIndexedSeq,
@@ -364,6 +367,8 @@ private[v2] case class GraftBucketInputPartition(
     posDeletes: Array[(String, Long, Long)],
     eqDeletes: Array[(String, Long, Long, Int)]) extends InputPartition
     with HasPartitionKey {
+  def hasDeletes: Boolean = posDeletes.nonEmpty || eqDeletes.nonEmpty
+
   override def partitionKey(): InternalRow =
     new GenericInternalRow(keyRaw.zip(keyTypes).map {
       case (v, t) => GraftSpj.toInternal(v, t)
@@ -398,19 +403,16 @@ private[v2] class GraftBucketReaderFactory(
       override def close(): Unit = ()
     }
 
-  private def hasDeletes(part: GraftBucketInputPartition): Boolean =
-    part.posDeletes.nonEmpty || part.eqDeletes.nonEmpty
-
-  // a delete-carrying partition must come back as rows (the position
-  // counter / key probe walk them one by one); delete-free partitions
-  // keep the vectorized batch hand-off
+  // a delete-carrying partition comes back as rows (the position
+  // counter / key probe walk them one by one); a scan without any
+  // keeps the vectorized batch hand-off
   override def supportColumnarReads(p: InputPartition): Boolean =
-    returningBatch && !hasDeletes(p.asInstanceOf[GraftBucketInputPartition])
+    returningBatch
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
     val part = p.asInstanceOf[GraftBucketInputPartition]
-    if (!hasDeletes(part))
+    if (!part.hasDeletes)
       return reader(part.files.iterator.flatMap {
         case (path, len, _, pv) => batchFunc(pf(path, len, pv))
       })

@@ -76,16 +76,19 @@ object StreamingOps {
     ()
   }
 
+  /** (script_id, ddl) per file dropped into `dir`: the batch
+    * [[graft.api.Engine.readScripts]] projection (same ids, same
+    * refusal of compressed files), uncoalesced. */
+  private def scriptStream(spark: SparkSession, dir: String): DataFrame =
+    graft.api.Engine.scriptRows(spark.readStream.format("binaryFile")
+      .schema(graft.api.Engine.BinaryFileSchema).load(dir))
+
   /** Stream of DDL scripts dropped into a directory (one file = one
     * script), converted incrementally: per-file parse+render is
     * stateless, so this is a pure map stream — no state store. */
   def ddlConvertStream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.readStream
-      .option("wholetext", "true")
-      .text(dir)
-      .select(col("_metadata.file_path").as("script_id"), col("value").as("ddl"))
-      .as[(String, String)]
+    scriptStream(spark, dir).as[(String, String)]
       .map { case (id, ddl) =>
         val r = graft.convert.Db2Renderer.convert(ddl)
         (id, r.icebergDdl, r.ewiCount, r.tablesConverted)
@@ -100,11 +103,7 @@ object StreamingOps {
     * needs no state store and scales with file arrival rate. */
   def ddlAssessStream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.readStream
-      .option("wholetext", "true")
-      .text(dir)
-      .select(col("_metadata.file_path").as("script_id"), col("value").as("ddl"))
-      .as[(String, String)]
+    scriptStream(spark, dir).as[(String, String)]
       .map { case (id, ddl) =>
         val r = graft.assess.Assessor.assess(ddl)
         (id, r.tablesTotal, r.overallScore, r.overallLevel,

@@ -806,4 +806,30 @@ class PlanSpec extends AnyFunSuite {
     assert(net === (1L to 10L).map(k =>
       k -> (if (k % 2 == 0) "x y" else "p%q", if (k <= 2) 5 else 0)).toMap)
   }
+
+  test("deleteWhere under a table path that needs URI escaping: " +
+      "readSnapshot, the DSv2 scan and the key-grouped scan drop the row") {
+    import org.apache.spark.sql.functions.col
+    import graft.api.SchemaTranslator
+    import graft.sources.IcebergSnapshot
+    val table = graft.parse.Db2Parser.parse(
+      """CREATE TABLE S.ESCDEL (K BIGINT NOT NULL, V VARCHAR(10))
+        |PARTITION BY RANGE (V);""".stripMargin).tables.head
+    val out = java.nio.file.Files.createTempDirectory("plan_escdel").toString + "/a b"
+    SchemaTranslator.migrateTable(spark.createDataFrame(
+      (1L to 10L).map(k => (k, if (k % 2 == 0) "x y" else "p"))).toDF("K", "V"),
+      table, out)
+    SchemaTranslator.deleteWhere(spark, table, out, col("K") === 3L)
+    val want = (1L to 10L).filterNot(_ == 3L).toSet
+    def keys(df: org.apache.spark.sql.DataFrame) =
+      df.select("K").collect().map(_.getLong(0)).toSet
+    assert(keys(IcebergSnapshot.readSnapshot(spark, out, table)) === want)
+    assert(keys(spark.read.format("graft-iceberg").load(out)) === want)
+    val spj = spark.newSession()
+    spj.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    val keyGrouped = spj.read.format("graft-iceberg").load(out)
+    assert(keys(keyGrouped) === want)
+    assert(keyGrouped.queryExecution.executedPlan.toString.contains("key-grouped"),
+      keyGrouped.queryExecution.executedPlan.toString)
+  }
 }
