@@ -50,28 +50,34 @@ object Bench {
         .foreach(_.unpersist(blocking = false))
       names.map { case (name, fn) =>
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        val ok = try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          false
         }
-        name -> (System.nanoTime() - t0) / 1e9
+        name -> ((System.nanoTime() - t0) / 1e9, ok)
       }.toMap
     }
+    // A failed rep still counts its elapsed time as a sample, so the
+    // artifact lists per query how many reps threw: a query that starts
+    // failing reads as failed, not as faster.
+    val failed = names.map { case (name, _) => name -> samples.count(!_(name)._2) }
+      .filter(_._2 > 0).map { case (k, n) => "\"" + k + "\":" + n }.mkString("{", ",", "}")
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
-    val results = names.map { case (name, _) => name -> median(samples.map(_(name))) }
+    val results = names.map { case (name, _) => name -> median(samples.map(_(name)._1)) }
     // Per-query MIN rides alongside the median: a contended host window
     // inflates medians broadly but rarely all reps of one query, so
     // median≫min flags steal without a manual rerun (BASELINE.md used
     // to reconstruct this by hand).
-    val mins = names.map { case (name, _) => name -> samples.map(_(name)).min }
+    val mins = names.map { case (name, _) => name -> samples.map(_(name)._1).min }
     def jsonMap(kvs: Seq[(String, Double)]): String =
       kvs.map { case (k, v) => "\"" + k + f"""\":$v%.3f""" }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${jsonMap(results)},"queries_min":${jsonMap(mins)},"sf":"$sfDir","reps":$reps}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${jsonMap(results)},"queries_min":${jsonMap(mins)},"failed":$failed,"sf":"$sfDir","reps":$reps}"""
     // The driver captures only the TAIL of stdout; with 80+ queries the
     // single line can truncate mid-map and lose the total. Persist the
     // full JSON to a file so the grading artifact is always complete —

@@ -216,41 +216,48 @@ object Engine {
     }
   }
 
-  /** Global (per-script) report rollup as ONE hash aggregation —
-    * SURVEY.md §2.6 A2-A8 as Spark aggs: conditional counts
-    * (categorization), sums (inventory), means with empty→100 fallback
-    * (component scores), weighted overall projection and the
-    * traffic-light CASE. */
-  def assessReport(rows: Dataset[AssessRow]): DataFrame = {
-    val level = (score: org.apache.spark.sql.Column) =>
-      when(score >= 80, ReadinessLevel.Green)
-        .when(score >= 50, ReadinessLevel.Yellow)
-        .otherwise(ReadinessLevel.Red)
-    rows.toDF()
-      .groupBy(col("scriptId").as("script_id"))
-      .agg(
-        count(lit(1)).cast("int").as("tables_total"),
-        sum(when(col("canAutoConvert"), 1).otherwise(0)).cast("int").as("tables_auto"),
-        sum(when(!col("canAutoConvert") && col("nCritical") === 0, 1).otherwise(0))
-          .cast("int").as("tables_manual"),
-        sum(when(!col("canAutoConvert") && col("nCritical") > 0, 1).otherwise(0))
-          .cast("int").as("tables_blocked"),
-        sum(col("columnCount")).cast("int").as("total_columns"),
-        sum(col("constraintCount")).cast("int").as("total_constraints"),
-        sum(col("nCritical")).cast("int").as("critical_issues"),
-        sum(col("nWarning")).cast("int").as("warning_issues"),
-        sum(col("nInfo")).cast("int").as("info_issues"),
-        coalesce(avg(col("datatypeScore")), lit(100.0)).as("datatype_score"),
-        coalesce(avg(col("constraintScore")), lit(100.0)).as("constraint_score"),
-        coalesce(avg(col("partitionScore")), lit(100.0)).as("partition_score"),
-        coalesce(avg(col("specialScore")), lit(100.0)).as("special_features_score"))
-      .withColumn("overall_score",
-        col("datatype_score") * Assessor.Weights("datatype") +
-          col("constraint_score") * Assessor.Weights("constraint") +
-          col("partition_score") * Assessor.Weights("partition") +
-          col("special_features_score") * Assessor.Weights("special"))
-      .withColumn("overall_level", level(col("overall_score")))
+  /** The A2-A8 readiness aggregates of [[assessReport]] and
+    * [[assessRollup]] over AssessRow columns (SURVEY.md §2.6):
+    * conditional counts (categorization), sums (inventory) and means
+    * with empty→100 fallback (component scores). */
+  private def readinessAggs: Seq[org.apache.spark.sql.Column] = Seq(
+    count(lit(1)).cast("int").as("tables_total"),
+    sum(when(col("canAutoConvert"), 1).otherwise(0)).cast("int").as("tables_auto"),
+    sum(when(!col("canAutoConvert") && col("nCritical") === 0, 1).otherwise(0))
+      .cast("int").as("tables_manual"),
+    sum(when(!col("canAutoConvert") && col("nCritical") > 0, 1).otherwise(0))
+      .cast("int").as("tables_blocked"),
+    sum(col("columnCount")).cast("int").as("total_columns"),
+    sum(col("constraintCount")).cast("int").as("total_constraints"),
+    sum(col("nCritical")).cast("int").as("critical_issues"),
+    sum(col("nWarning")).cast("int").as("warning_issues"),
+    sum(col("nInfo")).cast("int").as("info_issues"),
+    coalesce(avg(col("datatypeScore")), lit(100.0)).as("datatype_score"),
+    coalesce(avg(col("constraintScore")), lit(100.0)).as("constraint_score"),
+    coalesce(avg(col("partitionScore")), lit(100.0)).as("partition_score"),
+    coalesce(avg(col("specialScore")), lit(100.0)).as("special_features_score"))
+
+  /** The weighted `overall_score` projection over [[readinessAggs]]'
+    * component scores, and its traffic-light `overall_level`. */
+  private def withOverall(agg: DataFrame): DataFrame = {
+    val overall = col("datatype_score") * Assessor.Weights("datatype") +
+      col("constraint_score") * Assessor.Weights("constraint") +
+      col("partition_score") * Assessor.Weights("partition") +
+      col("special_features_score") * Assessor.Weights("special")
+    agg.withColumn("overall_score", overall)
+      .withColumn("overall_level",
+        when(col("overall_score") >= 80, ReadinessLevel.Green)
+          .when(col("overall_score") >= 50, ReadinessLevel.Yellow)
+          .otherwise(ReadinessLevel.Red))
   }
+
+  /** Global (per-script) report rollup as ONE hash aggregation of
+    * [[readinessAggs]], plus the weighted overall projection and the
+    * traffic-light CASE. */
+  def assessReport(rows: Dataset[AssessRow]): DataFrame =
+    withOverall(rows.toDF()
+      .groupBy(col("scriptId").as("script_id"))
+      .agg(readinessAggs.head, readinessAggs.tail: _*))
 
   /** Per-table ∪ per-schema ∪ per-script ∪ grand-total readiness in ONE
     * pass: the reference computes the per-table list and the global
@@ -263,12 +270,8 @@ object Engine {
     * per-table rows reproduce the AssessRow scores exactly and
     * script-level rows equal [[assessReport]] (Db2EngineSpec pins
     * both). */
-  def assessRollup(rows: Dataset[AssessRow]): DataFrame = {
-    val level = (score: org.apache.spark.sql.Column) =>
-      when(score >= 80, ReadinessLevel.Green)
-        .when(score >= 50, ReadinessLevel.Yellow)
-        .otherwise(ReadinessLevel.Red)
-    rows.toDF()
+  def assessRollup(rows: Dataset[AssessRow]): DataFrame =
+    withOverall(rows.toDF()
       .select(col("scriptId").as("script_id"),
         coalesce(col("schema"), lit("")).as("schema"),
         col("tableName").as("table_name"),
@@ -277,30 +280,7 @@ object Engine {
         col("datatypeScore"), col("constraintScore"),
         col("partitionScore"), col("specialScore"))
       .rollup(col("script_id"), col("schema"), col("table_name"))
-      .agg(
-        grouping_id().cast("int").as("agg_level"),
-        count(lit(1)).cast("int").as("tables_total"),
-        sum(when(col("canAutoConvert"), 1).otherwise(0)).cast("int").as("tables_auto"),
-        sum(when(!col("canAutoConvert") && col("nCritical") === 0, 1).otherwise(0))
-          .cast("int").as("tables_manual"),
-        sum(when(!col("canAutoConvert") && col("nCritical") > 0, 1).otherwise(0))
-          .cast("int").as("tables_blocked"),
-        sum(col("columnCount")).cast("int").as("total_columns"),
-        sum(col("constraintCount")).cast("int").as("total_constraints"),
-        sum(col("nCritical")).cast("int").as("critical_issues"),
-        sum(col("nWarning")).cast("int").as("warning_issues"),
-        sum(col("nInfo")).cast("int").as("info_issues"),
-        coalesce(avg(col("datatypeScore")), lit(100.0)).as("datatype_score"),
-        coalesce(avg(col("constraintScore")), lit(100.0)).as("constraint_score"),
-        coalesce(avg(col("partitionScore")), lit(100.0)).as("partition_score"),
-        coalesce(avg(col("specialScore")), lit(100.0)).as("special_features_score"))
-      .withColumn("overall_score",
-        col("datatype_score") * Assessor.Weights("datatype") +
-          col("constraint_score") * Assessor.Weights("constraint") +
-          col("partition_score") * Assessor.Weights("partition") +
-          col("special_features_score") * Assessor.Weights("special"))
-      .withColumn("overall_level", level(col("overall_score")))
-  }
+      .agg(grouping_id().cast("int").as("agg_level"), readinessAggs: _*))
 
   /** A1 type-distribution rollup: explode the per-table map, then a
     * partial+final hash agg per base type. */

@@ -1,42 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.{Aggregator, Window}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
-
-/** Typed buffer for [[VecMeanAgg]] (Product root for the encoder). */
-final case class VecSumBuf(sum: Array[Double], n: Long)
-
-/** Per-key vector MEAN as a bounded typed Aggregator: the buffer is
-  * one running (Σ, n) pair per key, so each map task reduces its
-  * whole partition to ONE row per centroid before the shuffle —
-  * O(centroids · dim) exchanged per task, independent of |corpus|.
-  * The alternative (posexplode to (key, dim-ordinal) rows and
-  * avg per ordinal) multiplies the shuffle rows by `dim` — fine at
-  * dim 64, the wrong shape at embedding dims of 1024+. Dimension is
-  * discovered from the first row (empty buffer ⇒ adopt row length). */
-class VecMeanAgg extends Aggregator[(Int, Seq[Double]), VecSumBuf, Seq[Double]] {
-  private def add(sum: Array[Double], v: Seq[Double]): Array[Double] = {
-    val s = if (sum.length == 0) new Array[Double](v.length) else sum
-    var i = 0
-    while (i < s.length) { s(i) += v(i); i += 1 }
-    s
-  }
-  override def zero: VecSumBuf = VecSumBuf(Array.emptyDoubleArray, 0L)
-  override def reduce(b: VecSumBuf, row: (Int, Seq[Double])): VecSumBuf =
-    VecSumBuf(add(b.sum, row._2), b.n + 1)
-  override def merge(a: VecSumBuf, b: VecSumBuf): VecSumBuf =
-    if (a.n == 0) b
-    else if (b.n == 0) a
-    else VecSumBuf(add(a.sum, b.sum.toSeq), a.n + b.n)
-  override def finish(b: VecSumBuf): Seq[Double] =
-    if (b.n == 0) null else b.sum.map(_ / b.n).toSeq
-  override def bufferEncoder: Encoder[VecSumBuf] = Encoders.product[VecSumBuf]
-  override def outputEncoder: Encoder[Seq[Double]] = ExpressionEncoder()
-}
 
 /** IVF (inverted-file) approximate-nearest-neighbor index — the
   * coarse-quantizer scale path for similarity search (builder brief:
@@ -46,15 +14,20 @@ class VecMeanAgg extends Aggregator[(Int, Seq[Double]), VecSumBuf, Seq[Double]] 
   * `nCentroids` cells ([[train]] / [[assign]]); a query scores only the
   * cells of its `nProbe` nearest centroids ([[topK]]) — corpus scan
   * cost drops from |corpus| to ~|corpus|·nProbe/nCentroids per query.
-  * All stages are declarative DataFrame ops: training is `nIters`
-  * broadcast-join + groupBy rounds (the classic distributed Lloyd
-  * step), assignment a broadcast join, search a cell-local join — no
-  * driver-side loops over data, so the same plan runs at 100 TB with
-  * centroids staying broadcast-small (nCentroids ≪ |corpus|).
+  * Training is `nIters` Lloyd rounds, each ONE Spark job: a
+  * scan-side native assignment ([[graft.functions.NearestCentroid]])
+  * feeding [[Lloyd.means]], which reduces every partition to one
+  * (Σ, n) partial per centroid and folds the partials in partition
+  * order. Assignment is the same native projection and search a
+  * cell-local join — no driver-side loops over data, so the same plan
+  * runs at 100 TB with centroids staying broadcast-small
+  * (nCentroids ≪ |corpus|). No step reads or sets a session conf.
   *
-  * Everything is deterministic: seeds are the first `nCentroids`
-  * vectors by id, ties in assignment break by centroid id, so results
-  * are reproducible run-to-run (needed for verify/bench stability).
+  * Results are reproducible run to run (needed for verify/bench
+  * stability): seeds are the first `nCentroids` vectors by id, ties in
+  * assignment break by centroid id, and each centroid's sum is folded
+  * in a fixed order, so the centroids are bit-identical for the same
+  * input partitioning.
   * With `nProbe = nCentroids` the search degenerates to exact brute
   * force — IvfSpec asserts equality with [[Similarity.bruteForceTopK]],
   * which carries a DuckDB oracle, giving the whole IVF plumbing an
@@ -71,8 +44,7 @@ object Ivf {
   /** Nearest-centroid id for every row of `vecs` (columns: id, vec,
     * n2): broadcast the centroid table, min_by over (dist², cid).
     *
-    * n = 1 is the corpus-sized path (every Lloyd round, every assign)
-    * and runs as a PURE PROJECTION through the native
+    * n = 1 is the corpus-sized path (every assign) and runs as a PURE PROJECTION through the native
     * [[graft.functions.NearestCentroid]] after collecting the
     * driver-small centroid table (the declarative form had already
     * collected it — `broadcast` — and then exploded the corpus
@@ -117,18 +89,19 @@ object Ivf {
   }
 
   /** K-means centroids: seeds = first `nCentroids` vectors by id,
-    * `nIters` Lloyd rounds (assign via broadcast join, recompute via
-    * per-dimension mean). Output: (cid, c_vec: array<double>, c_n2).
+    * `nIters` Lloyd rounds. Output: (cid, c_vec: array<double>, c_n2).
     *
-    * The centroid table is MATERIALIZED on the driver after every
-    * Lloyd round (it is nCentroids·dim doubles — broadcast-small by
-    * the IVF contract) and re-entered as a fresh LocalRelation: each
-    * round's plan is seed-independent and constant-depth, instead of
-    * re-chaining the whole Lloyd history (which recomputes rounds
-    * 1..i−1 inside round i and doubles the plan per iteration). The
-    * per-round Spark job — broadcast-join assignment + (cid, pos)
-    * mean shuffle — is unchanged and fully distributed; only the
-    * nCentroids-row result crosses the driver. */
+    * A round is one Spark job: the native scan-side assignment (no
+    * crossJoin explosion, no corpus shuffle — see [[nearest]]) feeds
+    * [[Lloyd.means]], whose map tasks each emit one (Σ, n) partial per
+    * centroid — O(centroids · dim) per task whatever the corpus size —
+    * folded per centroid in partition order. The caller's session
+    * settings (adaptive execution included) are neither read nor
+    * changed, so concurrent work on the session keeps them. The
+    * centroid table is MATERIALIZED on the driver after every round
+    * (nCentroids·dim doubles — broadcast-small by the IVF contract)
+    * and fed into the next round as literals: each round's plan is
+    * constant-depth instead of re-chaining the whole Lloyd history. */
   def train(corpus: DataFrame, nCentroids: Int, nIters: Int): DataFrame = {
     val spark = corpus.sparkSession
     // The (id, vec) projection is consumed once by the seed job and
@@ -140,63 +113,34 @@ object Ivf {
     // returned centroid table is a driver-materialized LocalRelation.
     val vecs = prep(corpus)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Each Lloyd round is one bounded two-stage job (scan-side
-    // assignment + the O(centroids·dim)-per-task means shuffle), but
-    // under AQE the collect executes the map stage and the reduce as
-    // TWO driver-synchronized jobs per round (JobProfile: 2 jobs/round,
-    // both single-digit-task). Adaptive replanning buys nothing for a
-    // shuffle whose volume is bounded by the centroid table, at any
-    // corpus size — run the loop with AQE off (q113's flip-and-restore
-    // pattern) so each round costs exactly one driver round-trip.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqePrior = spark.conf.getOption(aqeKey)
-    spark.conf.set(aqeKey, "false")
     try {
-    // Seeds: first nCentroids vectors by id, numbered on the driver —
-    // nCentroids rows, no unpartitioned row_number window.
-    var cents: Array[Array[Double]] = vecs.orderBy("id").limit(nCentroids)
-      .select(col("id"), transform(col("vec"), x => x.cast("double")).as("v"))
-      .collect()
-      .sortBy(r => r.getAs[Number](0).longValue())
-      .map(_.getSeq[Double](1).toArray)
-    import spark.implicits._
-    val meanAgg = new VecMeanAgg
-    var it = 0
-    while (it < nIters) {
-      // Lloyd step: native scan-side assignment (no crossJoin
-      // explosion, no corpus shuffle — see [[nearest]]) + per-centroid
-      // vector mean via the bounded [[VecMeanAgg]] — each map task
-      // emits one (Σ, n) partial per centroid, so the shuffle carries
-      // O(centroids · dim) per task regardless of corpus size or
-      // embedding dimension. cn2 is the VectorDot fold (left-to-right
-      // Σc², the exact value centroidsDF's c_n2 column carries).
-      val cn2 = cents.map { c =>
-        var s = 0.0; var i = 0
-        while (i < c.length) { s += c(i) * c(i); i += 1 }
-        s
-      }
-      val assigned = vecs.select(
-        graft.functions.NearestCentroid(col("vec"), cents,
-          Array.tabulate(cents.length)(_ + 1), cn2).as("cid"),
-        col("vec"))
-      val means = assigned
-        .select(col("cid"),
-          transform(col("vec"), x => x.cast("double")).as("v"))
-        .as[(Int, Seq[Double])]
-        .groupByKey(_._1)
-        .agg(meanAgg.toColumn.name("m"))
+      // Seeds: first nCentroids vectors by id, numbered on the driver —
+      // nCentroids rows, no unpartitioned row_number window.
+      var cents: Array[Array[Double]] = vecs.orderBy("id").limit(nCentroids)
+        .select(col("id"), transform(col("vec"), x => x.cast("double")).as("v"))
         .collect()
-        .map { case (cid, m) => cid -> m.toArray }.toMap
-      // Empty cells keep their previous centroid.
-      cents = cents.zipWithIndex.map { case (prev, i) => means.getOrElse(i + 1, prev) }
-      it += 1
-    }
-    centroidsDF(spark, cents)
-    } finally {
-      aqePrior match {
-        case Some(v) => spark.conf.set(aqeKey, v)
-        case None => spark.conf.unset(aqeKey)
+        .sortBy(r => r.getAs[Number](0).longValue())
+        .map(_.getSeq[Double](1).toArray)
+      var it = 0
+      while (it < nIters) {
+        // cn2 is the VectorDot fold (left-to-right Σc², the exact value
+        // centroidsDF's c_n2 column carries).
+        val cn2 = cents.map { c =>
+          var s = 0.0; var i = 0
+          while (i < c.length) { s += c(i) * c(i); i += 1 }
+          s
+        }
+        val cid = graft.functions.NearestCentroid(col("vec"), cents,
+          Array.tabulate(cents.length)(_ + 1), cn2)
+        val means = Lloyd.means(
+          vecs.select(array(cid - 1), col("vec").cast("array<double>")),
+          cents.length)
+        // Empty cells keep their previous centroid.
+        cents = cents.zipWithIndex.map { case (prev, i) => means.getOrElse(i, prev) }
+        it += 1
       }
+      centroidsDF(spark, cents)
+    } finally {
       vecs.unpersist(false)
       ()
     }
@@ -204,13 +148,21 @@ object Ivf {
 
   /** Corpus cell assignment: (cid, id, vec, n2) — the inverted file.
     * At scale this is the materialized/bucketed layout: partition the
-    * corpus by cid once, search cells without reshuffling. */
+    * corpus by cid once, search cells without reshuffling.
+    *
+    * Eager: `centroids` is COLLECTED to the driver here, when the
+    * DataFrame is built (one Spark job unless it is a local relation,
+    * as [[train]]'s output is), and enters the plan as literals. */
   def assign(corpus: DataFrame, centroids: DataFrame): DataFrame =
     nearest(prep(corpus), centroids).select(col("cid"), col("id"), col("vec"), col("n2"))
 
   /** The `nProbe` nearest cells per query: (cid, q_id, q_vec, q_norm)
     * — the probe list [[topK]] and [[IvfPq.topK]] join against the
-    * inverted file. Broadcast-small: |queries|·nProbe rows. */
+    * inverted file. Broadcast-small: |queries|·nProbe rows.
+    *
+    * With nProbe = 1 `centroids` is collected when the DataFrame is
+    * built (the [[assign]] path); with nProbe > 1 it stays a broadcast
+    * join side and is read when the result runs. */
   def probes(queries: DataFrame, centroids: DataFrame, nProbe: Int): DataFrame =
     nearest(prep(queries), centroids, nProbe)
       .select(col("cid"), col("id").as("q_id"), col("vec").as("q_vec"),
@@ -221,7 +173,10 @@ object Ivf {
     * (q_id, rk, c_id, score). Ranking is the bounded [[TopK]]
     * aggregator, not a rank window: map tasks reduce each query's
     * probed-cell candidates to ≤k before the shuffle, so the exchange
-    * carries O(queries·k) rows, never every scored candidate. */
+    * carries O(queries·k) rows, never every scored candidate.
+    *
+    * `centroids` is collected once when the DataFrame is built, by
+    * [[assign]]; see [[probes]] for the probe side. */
   def topK(corpus: DataFrame, queries: DataFrame, k: Int,
       centroids: DataFrame, nProbe: Int): DataFrame = {
     val cells = assign(corpus, centroids)

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
 
 import graft.functions.TextFunctions
 import graft.functions.TextFunctions._
@@ -927,6 +930,46 @@ object PipelineQueries {
           .cast("double"), 2).as("sum_price"))
   }
 
+  /** Registers `cat` on `s` as a graft-iceberg catalog over the
+    * warehouse `wh` — the one session change the catalog queries make. */
+  private def registerCatalog(s: SparkSession, cat: String, wh: String): Unit = {
+    s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftIcebergCatalog")
+    s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+  }
+
+  /** Runs the storage-partitioned join `joinSql` over catalog `cat`
+    * (warehouse `wh`) SHUFFLE-FREE and returns its aggregate `aggs` as
+    * one driver row plus `spj_ok`: zero shuffle exchanges and two
+    * native batch scans in the executed plan, and `alsoOk`. The join
+    * plans and runs on its own session (`s.newSession()`, same
+    * SparkContext and extensions) that carries the catalog, v2
+    * bucketing with partition-value push, no broadcast joins and no
+    * adaptive execution; the caller's session settings stay as they
+    * were, also for work running on it meanwhile. The returned row is
+    * built from the collected result, so the hash compare pins the
+    * exchange-free execution itself. */
+  private def spjAudited(s: SparkSession, cat: String, wh: String,
+      joinSql: String, alsoOk: Boolean = true)(aggs: Column*): DataFrame = {
+    val spj = s.newSession()
+    registerCatalog(spj, cat, wh)
+    spj.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    spj.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
+    spj.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spj.conf.set("spark.sql.adaptive.enabled", "false")
+    val join = spj.sql(joinSql)
+    val plan = join.queryExecution.executedPlan
+    val spjOk = alsoOk &&
+      plan.collect { case e: ShuffleExchangeLike => e }.isEmpty &&
+      plan.collect { case b: BatchScanExec => b }.size == 2
+    val agg = join.agg(aggs.head, aggs.tail: _*)
+    val row = agg.collect()(0)
+    // non-null columns, as a tuple-built local row would carry
+    val schema = StructType(agg.schema.fields.map(_.copy(nullable = false)) :+
+      StructField("spj_ok", BooleanType, nullable = false))
+    s.createDataFrame(
+      java.util.Collections.singletonList(Row.fromSeq(row.toSeq :+ spjOk)), schema)
+  }
+
   /** The SQL-catalog face under the hard oracle: a catalog table is
     * CREATEd and filled with `INSERT INTO ... SELECT` over plain SQL
     * ([[graft.sources.v2.GraftIcebergCatalog]]), then a filtered SQL
@@ -940,9 +983,7 @@ object PipelineQueries {
     val (wh, built) = amortizedIndexPath(s, dir, "iceberg_sqlcat",
       p => new java.io.File(p, "orders_cat/metadata/version-hint.text")
         .isFile, table = "orders")
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.v2.GraftIcebergCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    registerCatalog(s, cat, wh)
     if (!built) {
       s.sql(
         s"""CREATE TABLE $cat.orders_cat (
@@ -1053,9 +1094,7 @@ object PipelineQueries {
     val (wh, built) = amortizedIndexPath(s, dir, "iceberg_evolution",
       p => new java.io.File(p, "orders_evo/metadata/version-hint.text")
         .isFile, table = "orders")
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.v2.GraftIcebergCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    registerCatalog(s, cat, wh)
     if (!built) {
       s.sql(
         s"""CREATE TABLE $cat.orders_evo (
@@ -1106,9 +1145,7 @@ object PipelineQueries {
     val (wh, built) = amortizedIndexPath(s, dir, "iceberg_hidden",
       p => new java.io.File(p, "events_day/metadata/version-hint.text")
         .isFile, table = "events")
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.v2.GraftIcebergCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    registerCatalog(s, cat, wh)
     if (!built) {
       s.sql(
         s"""CREATE TABLE $cat.events_day (
@@ -1196,9 +1233,7 @@ object PipelineQueries {
     val (wh, built) = amortizedIndexPath(s, dir, "iceberg_sql_delete",
       p => new java.io.File(p, "orders_del/metadata/version-hint.text")
         .isFile, table = "orders")
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.v2.GraftIcebergCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    registerCatalog(s, cat, wh)
     if (!built) {
       s.sql(
         s"""CREATE TABLE $cat.orders_del (
@@ -1239,9 +1274,7 @@ object PipelineQueries {
     val cat = s"graftmrg_${Integer.toHexString(dir.hashCode)}"
     val (wh, built) = amortizedIndexPath(s, dir, "iceberg_sql_merge",
       p => new java.io.File(p, "_built_merge").isFile, table = "orders")
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.v2.GraftIcebergCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    registerCatalog(s, cat, wh)
     if (!built) {
       s.sql(
         s"""CREATE TABLE $cat.orders_mrg (
@@ -1293,9 +1326,7 @@ object PipelineQueries {
     val cat = s"graftspj_${Integer.toHexString(dir.hashCode)}"
     val (wh, built) = amortizedIndexPath(s, dir, "iceberg_spj",
       p => new java.io.File(p, "_built_spj").isFile, table = "orders")
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.v2.GraftIcebergCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    registerCatalog(s, cat, wh)
     if (!built) {
       t(s, dir, "orders").createOrReplaceTempView("orders_src_q113")
       s.sql(
@@ -1318,38 +1349,14 @@ object PipelineQueries {
         new java.io.File(wh, "_built_spj").toPath, "1\n".getBytes("UTF-8"))
       ()
     }
-    // flip the SPJ confs, run the join SHUFFLE-FREE, audit the plan,
-    // restore — the returned row is built from the collected result
-    val keys = Seq("spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-      "spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.enabled")
-    val prior = keys.map(k => k -> s.conf.getOption(k))
-    keys.zip(Seq("true", "true", "-1", "false")).foreach {
-      case (k, v) => s.conf.set(k, v)
-    }
-    try {
-      val join = s.sql(
-        s"""SELECT a.O_ORDERKEY AS k, a.PA + b.PB AS p
-           |FROM $cat.spj_a a JOIN $cat.spj_b b
-           |ON a.O_ORDERKEY = b.O_ORDERKEY""".stripMargin)
-      val plan = join.queryExecution.executedPlan
-      val spjOk = plan.collect {
-        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
-      }.isEmpty && plan.collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-      }.size == 2
-      val row = join.agg(
-        count(lit(1)).as("n_rows"),
-        sum(col("k")).cast("bigint").as("sum_keys"),
-        round(sum(col("p").cast("decimal(28,4)")).cast("double"), 2)
-          .as("sum_price")).collect()(0)
-      import s.implicits._
-      Seq((row.getLong(0), row.getLong(1), row.getDouble(2), spjOk))
-        .toDF("n_rows", "sum_keys", "sum_price", "spj_ok")
-    } finally prior.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
+    spjAudited(s, cat, wh,
+      s"""SELECT a.O_ORDERKEY AS k, a.PA + b.PB AS p
+         |FROM $cat.spj_a a JOIN $cat.spj_b b
+         |ON a.O_ORDERKEY = b.O_ORDERKEY""".stripMargin)(
+      count(lit(1)).as("n_rows"),
+      sum(col("k")).cast("bigint").as("sum_keys"),
+      round(sum(col("p").cast("decimal(28,4)")).cast("double"), 2)
+        .as("sum_price"))
   }
 
   /** STORAGE-PARTITIONED JOIN over a MoR table that CARRIES position
@@ -1365,9 +1372,7 @@ object PipelineQueries {
     val cat = s"graftspjd_${Integer.toHexString(dir.hashCode)}"
     val (wh, built) = amortizedIndexPath(s, dir, "iceberg_spj_del",
       p => new java.io.File(p, "_built_spjd").isFile, table = "orders")
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.v2.GraftIcebergCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    registerCatalog(s, cat, wh)
     if (!built) {
       t(s, dir, "orders").createOrReplaceTempView("orders_src_q114")
       s.sql(
@@ -1399,41 +1404,19 @@ object PipelineQueries {
         new java.io.File(wh, "_built_spjd").toPath, "1\n".getBytes("UTF-8"))
       ()
     }
-    val keys = Seq("spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-      "spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.enabled")
-    val prior = keys.map(k => k -> s.conf.getOption(k))
-    keys.zip(Seq("true", "true", "-1", "false")).foreach {
-      case (k, v) => s.conf.set(k, v)
-    }
-    try {
-      val join = s.sql(
-        s"""SELECT a.O_ORDERKEY AS k, a.PA + b.PB AS p
-           |FROM $cat.spjd_a a JOIN $cat.spjd_b b
-           |ON a.O_ORDERKEY = b.O_ORDERKEY""".stripMargin)
-      val plan = join.queryExecution.executedPlan
-      // the `.files` inspection table is the public surface: content=1
-      // rows are live position delete files
-      val deletesLive = s.sql(
-        s"SELECT count(*) FROM $cat.spjd_b.files WHERE content = 1")
-        .collect()(0).getLong(0) > 0L
-      val spjOk = plan.collect {
-        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
-      }.isEmpty && plan.collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-      }.size == 2 && deletesLive
-      val row = join.agg(
-        count(lit(1)).as("n_rows"),
-        sum(col("k")).cast("bigint").as("sum_keys"),
-        round(sum(col("p").cast("decimal(28,4)")).cast("double"), 2)
-          .as("sum_price")).collect()(0)
-      import s.implicits._
-      Seq((row.getLong(0), row.getLong(1), row.getDouble(2), spjOk))
-        .toDF("n_rows", "sum_keys", "sum_price", "spj_ok")
-    } finally prior.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
+    // the `.files` inspection table is the public surface: content=1
+    // rows are live position delete files
+    val deletesLive = s.sql(
+      s"SELECT count(*) FROM $cat.spjd_b.files WHERE content = 1")
+      .collect()(0).getLong(0) > 0L
+    spjAudited(s, cat, wh,
+      s"""SELECT a.O_ORDERKEY AS k, a.PA + b.PB AS p
+         |FROM $cat.spjd_a a JOIN $cat.spjd_b b
+         |ON a.O_ORDERKEY = b.O_ORDERKEY""".stripMargin, deletesLive)(
+      count(lit(1)).as("n_rows"),
+      sum(col("k")).cast("bigint").as("sum_keys"),
+      round(sum(col("p").cast("decimal(28,4)")).cast("double"), 2)
+        .as("sum_price"))
   }
 
   /** STORAGE-PARTITIONED JOIN over IDENTITY-partitioned layouts — the
@@ -1450,9 +1433,7 @@ object PipelineQueries {
     val cat = s"graftspji_${Integer.toHexString(dir.hashCode)}"
     val (wh, built) = amortizedIndexPath(s, dir, "iceberg_spj_ident",
       p => new java.io.File(p, "_built_spji").isFile, table = "customer")
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.v2.GraftIcebergCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    registerCatalog(s, cat, wh)
     if (!built) {
       t(s, dir, "customer").createOrReplaceTempView("customer_src_q115")
       t(s, dir, "nation").createOrReplaceTempView("nation_src_q115")
@@ -1476,39 +1457,15 @@ object PipelineQueries {
         new java.io.File(wh, "_built_spji").toPath, "1\n".getBytes("UTF-8"))
       ()
     }
-    val keys = Seq("spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-      "spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.enabled")
-    val prior = keys.map(k => k -> s.conf.getOption(k))
-    keys.zip(Seq("true", "true", "-1", "false")).foreach {
-      case (k, v) => s.conf.set(k, v)
-    }
-    try {
-      val join = s.sql(
-        s"""SELECT c.NK AS k, c.ACCT AS acct, n.NNAME AS nname
-           |FROM $cat.spji_c c JOIN $cat.spji_n n
-           |ON c.NK = n.NK""".stripMargin)
-      val plan = join.queryExecution.executedPlan
-      val spjOk = plan.collect {
-        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
-      }.isEmpty && plan.collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-      }.size == 2
-      val row = join.agg(
-        count(lit(1)).as("n_rows"),
-        sum(col("k")).cast("bigint").as("sum_keys"),
-        round(sum(col("acct").cast("decimal(28,4)")).cast("double"), 2)
-          .as("sum_acct"),
-        sum(length(col("nname")).cast("bigint")).as("sum_name_len"))
-        .collect()(0)
-      import s.implicits._
-      Seq((row.getLong(0), row.getLong(1), row.getDouble(2),
-        row.getLong(3), spjOk))
-        .toDF("n_rows", "sum_keys", "sum_acct", "sum_name_len", "spj_ok")
-    } finally prior.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
+    spjAudited(s, cat, wh,
+      s"""SELECT c.NK AS k, c.ACCT AS acct, n.NNAME AS nname
+         |FROM $cat.spji_c c JOIN $cat.spji_n n
+         |ON c.NK = n.NK""".stripMargin)(
+      count(lit(1)).as("n_rows"),
+      sum(col("k")).cast("bigint").as("sum_keys"),
+      round(sum(col("acct").cast("decimal(28,4)")).cast("double"), 2)
+        .as("sum_acct"),
+      sum(length(col("nname")).cast("bigint")).as("sum_name_len"))
   }
 
   /** SQL `UPDATE` under the hard oracle: a conditioned in-place
@@ -1520,9 +1477,7 @@ object PipelineQueries {
     val cat = s"graftupd_${Integer.toHexString(dir.hashCode)}"
     val (wh, built) = amortizedIndexPath(s, dir, "iceberg_sql_update",
       p => new java.io.File(p, "_built_update").isFile, table = "orders")
-    s.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.v2.GraftIcebergCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    registerCatalog(s, cat, wh)
     if (!built) {
       s.sql(
         s"""CREATE TABLE $cat.orders_upd (

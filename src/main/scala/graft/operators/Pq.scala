@@ -66,26 +66,17 @@ object Pq {
   /** Per-subspace k-means codebooks. ALL subspaces train together:
     * each Lloyd round is ONE job — the full code array comes from one
     * scan-side [[graft.functions.PqEncode]] against the current
-    * codebooks, and a single (subspace·k + code)-keyed [[VecMeanAgg]]
-    * shuffle recomputes every codeword mean (map tasks emit one (Σ, n)
-    * per codeword — O(nSub·k·subDim) per task regardless of corpus
-    * size). Codebooks are nSub·k·subDim doubles, materialized on the
-    * driver per round (constant-depth plans, the Ivf.train lesson). */
+    * codebooks, and [[Lloyd.means]] walks each row's subspace slices
+    * directly into one (Σ, n) partial per codeword per map task
+    * (O(nSub·k·subDim) per task regardless of corpus size), folded per
+    * codeword in partition order, so codebooks are bit-identical run to
+    * run. No session setting is read or changed. Codebooks are
+    * nSub·k·subDim doubles, materialized on the driver per round
+    * (constant-depth plans, as in [[Ivf.train]]). */
   def train(corpus: DataFrame, dim: Int, nSub: Int, k: Int,
       nIters: Int): Codebooks = {
     require(dim % nSub == 0, s"dim $dim not divisible by nSub $nSub")
     val subDim = dim / nSub
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    // One job per Lloyd round: under AQE each round's collect runs the
-    // map stage and the reduce as TWO driver-synchronized jobs, and the
-    // codeword-means shuffle is bounded at O(nSub·k·subDim) per task —
-    // adaptive replanning buys nothing at any corpus size. Flip AQE off
-    // for the loop and restore after (the q113/Ivf.train pattern).
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqePrior = spark.conf.getOption(aqeKey)
-    spark.conf.set(aqeKey, "false")
-    try {
     // seeds: first k vectors by id, sliced into every subspace
     val seeds = corpus.orderBy("vec_id").limit(k)
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -94,32 +85,19 @@ object Pq {
       .map(_.getSeq[Double](1).toArray)
     var books: Array[Array[Array[Double]]] =
       Array.tabulate(nSub)(m => seeds.map(_.slice(m * subDim, (m + 1) * subDim)))
-    val meanAgg = new VecMeanAgg
     var it = 0
     while (it < nIters) {
-      val parts = (0 until nSub).map { m =>
-        struct((lit(m * k) + element_at(col("__code"), m + 1)).as("key"),
-          transform(sliceCol(col("embedding"), m, subDim), x => x.cast("double"))
-            .as("v"))
-      }
-      val means = corpus
-        .withColumn("__code", PqEncode(col("embedding"), books))
-        .select(posexplode(array(parts: _*)).as(Seq("m", "s")))
-        .select(col("s.key"), col("s.v")).as[(Int, Seq[Double])]
-        .groupByKey(_._1)
-        .agg(meanAgg.toColumn.name("mn"))
-        .collect()
-        .map { case (key, mn) => key -> mn.toArray }.toMap
+      // key m·k + code(m) ← subspace slice m of each row
+      val means = Lloyd.means(
+        corpus.select(PqEncode(col("embedding"), books),
+          col("embedding").cast("array<double>")),
+        nSub * k)
       // empty codewords keep their previous value
       books = Array.tabulate(nSub)(m =>
         Array.tabulate(k)(j => means.getOrElse(m * k + j, books(m)(j))))
       it += 1
     }
     Codebooks(subDim, books)
-    } finally aqePrior match {
-      case Some(v) => spark.conf.set(aqeKey, v)
-      case None => spark.conf.unset(aqeKey)
-    }
   }
 
   /** Scan-side encoder: adds `code` (array<int>, 0-based codeword ids,
