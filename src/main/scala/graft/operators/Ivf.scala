@@ -130,10 +130,11 @@ object Ivf {
           while (i < c.length) { s += c(i) * c(i); i += 1 }
           s
         }
-        val cid = graft.functions.NearestCentroid(col("vec"), cents,
-          Array.tabulate(cents.length)(_ + 1), cn2)
+        // 0-based cell ids: the keys Lloyd.means sums under
+        val cell = graft.functions.NearestCentroid(col("vec"), cents,
+          Array.tabulate(cents.length)(identity), cn2)
         val means = Lloyd.means(
-          vecs.select(array(cid - 1), col("vec").cast("array<double>")),
+          vecs.select(array(cell), col("vec").cast("array<double>")),
           cents.length)
         // Empty cells keep their previous centroid.
         cents = cents.zipWithIndex.map { case (prev, i) => means.getOrElse(i, prev) }
