@@ -937,6 +937,15 @@ object PipelineQueries {
     s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
   }
 
+  /** Deletes the warehouse `wh` of a catalog fixture whose build marker
+    * is absent, so a build that failed halfway starts again from nothing
+    * instead of failing on its first `CREATE TABLE` from then on. */
+  private[graft] def clearWarehouse(s: SparkSession, wh: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(wh)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    ()
+  }
+
   /** Runs the storage-partitioned join `joinSql` over catalog `cat`
     * (warehouse `wh`) SHUFFLE-FREE and returns its aggregate `aggs` as
     * one driver row plus `spj_ok`: zero shuffle exchanges and two
@@ -1276,6 +1285,7 @@ object PipelineQueries {
       p => new java.io.File(p, "_built_merge").isFile, table = "orders")
     registerCatalog(s, cat, wh)
     if (!built) {
+      clearWarehouse(s, wh)
       s.sql(
         s"""CREATE TABLE $cat.orders_mrg (
            |  O_ORDERKEY BIGINT NOT NULL,
@@ -1328,6 +1338,7 @@ object PipelineQueries {
       p => new java.io.File(p, "_built_spj").isFile, table = "orders")
     registerCatalog(s, cat, wh)
     if (!built) {
+      clearWarehouse(s, wh)
       t(s, dir, "orders").createOrReplaceTempView("orders_src_q113")
       s.sql(
         s"""CREATE TABLE $cat.spj_a (
@@ -1374,6 +1385,7 @@ object PipelineQueries {
       p => new java.io.File(p, "_built_spjd").isFile, table = "orders")
     registerCatalog(s, cat, wh)
     if (!built) {
+      clearWarehouse(s, wh)
       t(s, dir, "orders").createOrReplaceTempView("orders_src_q114")
       s.sql(
         s"""CREATE TABLE $cat.spjd_a (
@@ -1435,6 +1447,7 @@ object PipelineQueries {
       p => new java.io.File(p, "_built_spji").isFile, table = "customer")
     registerCatalog(s, cat, wh)
     if (!built) {
+      clearWarehouse(s, wh)
       t(s, dir, "customer").createOrReplaceTempView("customer_src_q115")
       t(s, dir, "nation").createOrReplaceTempView("nation_src_q115")
       s.sql(
@@ -1479,6 +1492,7 @@ object PipelineQueries {
       p => new java.io.File(p, "_built_update").isFile, table = "orders")
     registerCatalog(s, cat, wh)
     if (!built) {
+      clearWarehouse(s, wh)
       s.sql(
         s"""CREATE TABLE $cat.orders_upd (
            |  O_ORDERKEY BIGINT NOT NULL,
@@ -1623,7 +1637,7 @@ object PipelineQueries {
     // MEMORY_AND_DISK at bench scale: the chunk table has three
     // consumers (same rationale as q19/q20's shinglePersist). Like the
     // shingle persists, the cache entry outlives this call — the
-    // harnesses (Bench/Verify/QueryProfile) clear the CacheManager per
+    // harnesses (Bench/Verify/Profile) clear the CacheManager per
     // pass; a long-lived session embedding this query should pass NONE
     // or own the unpersist.
     Dedup.dropRepeatedChunks(t(s, dir, "documents"), "doc_id", "text",

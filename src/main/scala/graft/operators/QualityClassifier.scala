@@ -110,10 +110,9 @@ object QualityClassifier {
     *     broadcast-small contract ([[Ivf]]). No lineage growth, no
     *     persist/checkpoint cadence to tune.
     *
-    * `ckptEvery` is retained for source compatibility and ignored:
-    * there is no lineage to truncate. The doc-major table is persisted
-    * for the loop's lifetime and released before returning — callers
-    * only own the lifetime of `feats`/`labels` as before.
+    * The doc-major table is persisted for the loop's lifetime and
+    * released before returning — callers only own the lifetime of
+    * `feats`/`labels`.
     *
     * Floats: weight doubles round-trip the driver exactly; within-doc
     * margin terms now sum in sorted-bucket order (deterministic across
@@ -124,11 +123,9 @@ object QualityClassifier {
     * labeled doc, partition-parallel; only the ≤ numBuckets gradient
     * rows and the KB-sized weight literal ever cross the driver. */
   def train(feats: DataFrame, labels: DataFrame, idCol: String,
-      iters: Int, lr: Double, ckptEvery: Int = 2,
-      onIter: (Int, Double) => Unit = (_, _) => ()): DataFrame = {
+      iters: Int, lr: Double): DataFrame = {
     val spark = feats.sparkSession
     import spark.implicits._
-    val _ = ckptEvery // no-op; see scaladoc
     val n = labels.count().toDouble // one scalar; fixed across iters
     // Docs with a label but no features contribute nothing to any
     // gradient (every term carries a v factor), so the inner join is
@@ -158,8 +155,7 @@ object QualityClassifier {
     // an under-sized (or empty, iteration-1) array reads as weight 0.
     var w = Array.empty[Double]
     val touched = scala.collection.mutable.SortedSet.empty[Int]
-    for (it <- 1 to iters) {
-      val t0 = System.nanoTime()
+    for (_ <- 1 to iters) {
       val warr = typedlit(w.toSeq)
       // margin: the native codegen'd [[graft.functions.SparseWeightDot]]
       // — bit-identical left-to-right fold of the old interpreted
@@ -187,7 +183,6 @@ object QualityClassifier {
           w(b) -= lr * r.getDouble(1)
         }
       }
-      onIter(it, (System.nanoTime() - t0) / 1e9)
     }
     docMajor.unpersist(false)
     // every bucket that ever received a gradient, even if its weight

@@ -27,19 +27,6 @@ import org.apache.spark.sql.functions._
   * pointing at the sf0.1 fixture dir (default) and the slice cached
   * under java.io.tmpdir keyed by the base dir.
   */
-/** Tallies shuffle WRITE bytes across tasks — the probe-visible
-  * shuffle mass of one query run ([[ScaleBench]]'s SPJ probe). */
-private[tools] class SpjShuffleTally
-    extends org.apache.spark.scheduler.SparkListener {
-  val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-  def reset(): Unit = bytes.set(0L)
-  override def onTaskEnd(
-      e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-    val m = e.taskMetrics
-    if (m != null) { bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten); () }
-  }
-}
-
 object ScaleBench {
 
   /** The probe set: the verdict's "heaviest pipeline queries" list,
@@ -262,31 +249,32 @@ object ScaleBench {
     val wh = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_scale_spj_${factor}x_" +
         Integer.toHexString(baseDir.hashCode)).getAbsolutePath
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.v2.GraftIcebergCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    // the probe's own sessions: the catalog, and per mode the SPJ keys
+    def catalogSession(): SparkSession = {
+      val s = spark.newSession()
+      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftIcebergCatalog")
+      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      s
+    }
     val done = new java.io.File(wh, "_DONE")
     if (!done.isFile) {
-      // clean rebuild after a killed prior build (partial tables)
-      if (new java.io.File(wh).exists())
-        org.apache.hadoop.fs.FileSystem.getLocal(
-          spark.sparkContext.hadoopConfiguration).delete(
-          new org.apache.hadoop.fs.Path(wh), true)
-      spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
-      spark.read.parquet(s"$baseDir/orders.parquet")
-        .crossJoin(spark.range(factor.toLong).toDF("r"))
+      val s = catalogSession()
+      graft.operators.PipelineQueries.clearWarehouse(s, wh)
+      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+      s.read.parquet(s"$baseDir/orders.parquet")
+        .crossJoin(s.range(factor.toLong).toDF("r"))
         .select((col("o_orderkey") * factor + col("r")).as("k"),
           col("o_totalprice").as("p"))
         .createOrReplaceTempView(s"spj_src_$factor")
-      spark.sql(s"""CREATE TABLE $cat.db.spj_a (
+      s.sql(s"""CREATE TABLE $cat.db.spj_a (
         |  K BIGINT NOT NULL, PA DOUBLE
         |) PARTITIONED BY (bucket(16, K))""".stripMargin)
-      spark.sql(s"INSERT INTO $cat.db.spj_a " +
+      s.sql(s"INSERT INTO $cat.db.spj_a " +
         s"SELECT k, p FROM spj_src_$factor WHERE k % 4 <> 3")
-      spark.sql(s"""CREATE TABLE $cat.db.spj_b (
+      s.sql(s"""CREATE TABLE $cat.db.spj_b (
         |  K BIGINT NOT NULL, PB DOUBLE
         |) PARTITIONED BY (bucket(16, K))""".stripMargin)
-      spark.sql(s"INSERT INTO $cat.db.spj_b " +
+      s.sql(s"INSERT INTO $cat.db.spj_b " +
         s"SELECT k, p * 0.5 FROM spj_src_$factor WHERE k % 3 <> 2")
       java.nio.file.Files.write(done.toPath, "1\n".getBytes("UTF-8"))
       ()
@@ -294,46 +282,32 @@ object ScaleBench {
     val joinSql =
       s"""SELECT a.K AS k, a.PA + b.PB AS v
          |FROM $cat.db.spj_a a JOIN $cat.db.spj_b b ON a.K = b.K""".stripMargin
-    val tally = new SpjShuffleTally
-    spark.sparkContext.addSparkListener(tally)
     def runMode(on: Boolean): (Double, Double, Double, Double) = {
-      val keys = Seq("spark.sql.sources.v2.bucketing.enabled",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-        "spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.enabled")
-      val prior = keys.map(k => k -> spark.conf.getOption(k))
-      keys.zip(Seq(on.toString, "true", "-1", "false")).foreach {
-        case (k, v) => spark.conf.set(k, v)
+      val s = catalogSession()
+      s.conf.set("spark.sql.sources.v2.bucketing.enabled", on.toString)
+      s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
+      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      s.conf.set("spark.sql.adaptive.enabled", "false")
+      val samples = (0 until reps).map { _ =>
+        s.catalog.clearCache()
+        val df = s.sql(joinSql)
+        val (n, c) = Spans.measure(s.sparkContext)(
+          df.agg(count(lit(1)), sum(col("v"))).collect()(0).getLong(0))
+        val exchanges = df.queryExecution.executedPlan.collect {
+          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
+        }.size
+        (c.wallSec, exchanges.toDouble, c.shuffleWriteBytes / 1e6, n.toDouble)
       }
-      try {
-        val samples = (0 until reps).map { _ =>
-          spark.catalog.clearCache()
-          tally.reset()
-          val df = spark.sql(joinSql)
-          val t0 = System.nanoTime()
-          val n = df.agg(count(lit(1)), sum(col("v"))).collect()(0).getLong(0)
-          val sec = (System.nanoTime() - t0) / 1e9
-          val exchanges = df.queryExecution.executedPlan.collect {
-            case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
-          }.size
-          Thread.sleep(500) // listener bus settles
-          (sec, exchanges.toDouble, tally.bytes.get / 1e6, n.toDouble)
-        }
-        (samples.map(_._1).min, samples.head._2,
-          samples.map(_._3).max, samples.head._4)
-      } finally prior.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+      (samples.map(_._1).min, samples.head._2,
+        samples.map(_._3).max, samples.head._4)
     }
-    try {
-      val (secOn, exOn, mbOn, nOn) = runMode(on = true)
-      val (secOff, exOff, mbOff, nOff) = runMode(on = false)
-      require(nOn == nOff, s"SPJ row drift: $nOn vs $nOff")
-      Map("sec_on" -> secOn, "sec_off" -> secOff,
-        "exchanges_on" -> exOn, "exchanges_off" -> exOff,
-        "shuffle_mb_on" -> mbOn, "shuffle_mb_off" -> mbOff,
-        "join_rows" -> nOn)
-    } finally spark.sparkContext.removeSparkListener(tally)
+    val (secOn, exOn, mbOn, nOn) = runMode(on = true)
+    val (secOff, exOff, mbOff, nOff) = runMode(on = false)
+    require(nOn == nOff, s"SPJ row drift: $nOn vs $nOff")
+    Map("sec_on" -> secOn, "sec_off" -> secOff,
+      "exchanges_on" -> exOn, "exchanges_off" -> exOff,
+      "shuffle_mb_on" -> mbOn, "shuffle_mb_off" -> mbOff,
+      "join_rows" -> nOn)
   }
 
   /** METADATA-plane scale probe: a table with `n` commits (one tiny
@@ -473,35 +447,17 @@ object ScaleBench {
           "id AS K", s"id % $parts AS P", "id * 1.0 AS V"), tdef, out)
       out
     }
-    def timed(body: => Unit): (Double, Int) = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      body
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1200) // listener bus is async
-      spark.sparkContext.removeSparkListener(listener)
-      (sec, jobs.get())
-    }
     val samples = (0 until reps).map { r =>
       val narrowOut = freshTable("narrow", r)
-      val (nSec, nJobs) = timed {
+      val (_, narrow) = Spans.measure(spark.sparkContext)(
         graft.api.SchemaTranslator.deleteWhere(spark, tdef, narrowOut,
           col("P") === lit(0L) && col("K") % 3 === lit(0),
-          pruning = Seq(graft.sources.IcebergPruning.ColumnBound.eq("P", 0L)))
-      }
+          pruning = Seq(graft.sources.IcebergPruning.ColumnBound.eq("P", 0L))))
       val wideOut = freshTable("wide", r)
-      val (wSec, wJobs) = timed {
+      val (_, wide) = Spans.measure(spark.sparkContext)(
         graft.api.SchemaTranslator.deleteWhere(spark, tdef, wideOut,
-          col("K") % 3 === lit(0))
-      }
-      (nSec, nJobs, wSec, wJobs)
+          col("K") % 3 === lit(0)))
+      (narrow.wallSec, narrow.jobs.size, wide.wallSec, wide.jobs.size)
     }
     Map("narrow_sec" -> samples.map(_._1).min,
       "narrow_jobs" -> samples.map(_._2).min.toDouble,
@@ -528,22 +484,6 @@ object ScaleBench {
         |  P BIGINT NOT NULL,
         |  V DOUBLE
         |) PARTITION BY RANGE (P);""".stripMargin).tables.head
-    def timedJobs(body: => Unit): (Double, Int) = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      body
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1200) // listener bus is async
-      spark.sparkContext.removeSparkListener(listener)
-      (sec, jobs.get())
-    }
     val samples = (0 until reps).map { r =>
       val out = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_scale_cmp_${parts}_$r").getAbsolutePath
@@ -556,11 +496,9 @@ object ScaleBench {
           "id AS K", s"id % $parts AS P", "id * 1.0 AS V"), tdef, out)
       graft.api.SchemaTranslator.deleteWhere(spark, tdef, out,
         col("K") % 3 === lit(0))
-      val (sec, jobs) = timedJobs {
-        graft.sources.IcebergDeletes.compactWithDeletes(spark, tdef, out)
-        ()
-      }
-      (sec, jobs)
+      val (_, c) = Spans.measure(spark.sparkContext)(
+        graft.sources.IcebergDeletes.compactWithDeletes(spark, tdef, out))
+      (c.wallSec, c.jobs.size)
     }
     Map("sec" -> samples.map(_._1).min,
       "jobs" -> samples.map(_._2).min.toDouble,
@@ -754,17 +692,9 @@ object ScaleBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val baseDir = sfDir
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
 
     val sf1Dir = new java.io.File(sys.props("java.io.tmpdir"),
       "graft_scale_sf1_" + Integer.toHexString(baseDir.hashCode)).getAbsolutePath
@@ -916,17 +846,9 @@ object ScaleDeep {
     "q93_ledger_dedup")
 
   def main(args: Array[String]): Unit = {
-    val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val baseDir = sfDir
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
 
     def sliceDir(tag: String) = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_scale_${tag}_" + Integer.toHexString(baseDir.hashCode))

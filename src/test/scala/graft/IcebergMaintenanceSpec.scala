@@ -303,28 +303,15 @@ class IcebergMaintenanceSpec extends AnyFunSuite {
         col("K") % 5 === 0)
       val expected = (1L to 400L).filterNot(_ % 5 == 0)
         .map(k => k -> (k * 7).toInt).toMap
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try IcebergDeletes.compactWithDeletes(spark, table, out)
-      finally {
-        // listener events are queued — give the bus a beat to drain
-        // before reading the counter
-        Thread.sleep(300)
-        spark.sparkContext.removeSparkListener(listener)
-      }
+      val (_, c) = graft.tools.Spans.measure(spark.sparkContext)(
+        IcebergDeletes.compactWithDeletes(spark, table, out))
       val after = IcebergSnapshot.readSnapshot(spark, out, table)
       assert(after.select("K", "N").collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
         === expected, s"read-back mismatch at P=$nParts")
       assert(after.inputFiles.length === nParts,
         s"expected one rewritten file per partition at P=$nParts")
-      (jobs.get(), nParts)
+      (c.jobs.size, nParts)
     }
 
     val (jobs6, _) = run(6)

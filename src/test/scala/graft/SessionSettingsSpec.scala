@@ -2,12 +2,11 @@ package graft
 
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Ivf, IvfPq, PipelineQueries, Pq}
+import graft.tools.Spans
 
 /** Operators leave the caller's session settings alone: IVF/PQ
   * training reads and sets no conf, so work running beside it keeps
@@ -52,19 +51,8 @@ class SessionSettingsSpec extends AnyFunSuite {
     }
   }
 
-  private def jobsOf(body: => Unit): Int = {
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    ListenerDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try { body; ListenerDrain(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
-  }
+  private def jobsOf(body: => Unit): Int =
+    Spans.measure(spark.sparkContext)(body)._2.jobs.size
 
   private def bits(xs: Iterable[Double]): Seq[Long] =
     xs.map(java.lang.Double.doubleToRawLongBits).toSeq

@@ -467,23 +467,14 @@ class RowLevelSpec extends AnyFunSuite {
       spark.range(0, 400).selectExpr(
         "id AS K", "id % 40 AS P", "id * 1.0 AS V"),
       table, out)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // touches ALL 40 partitions: the old per-partition coalesce(1)
-      // loop ran 40+ serial delete-write jobs here
+    // touches ALL 40 partitions: the old per-partition coalesce(1)
+    // loop ran 40+ serial delete-write jobs here
+    val (_, c) = graft.tools.Spans.measure(spark.sparkContext)(
       graft.api.SchemaTranslator.deleteWhere(spark, table, out,
-        col("K") % 3 === 0) // gcd(3, 40) = 1: hits every partition
-      Thread.sleep(2000) // listener bus is async
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() <= 30,
-      s"expected O(1) jobs for a 40-partition delete, saw ${jobs.get()}")
+        col("K") % 3 === 0)) // gcd(3, 40) = 1: hits every partition
+    val jobs = c.jobs.size
+    assert(jobs <= 30,
+      s"expected O(1) jobs for a 40-partition delete, saw $jobs")
     assert(graft.sources.IcebergSnapshot.readSnapshot(spark, out, table)
       .count() === 266L)
 
