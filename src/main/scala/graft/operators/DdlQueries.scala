@@ -38,13 +38,19 @@ object DdlQueries {
     * semantics: /root/reference/db2ice/assessor.py:217-273,
     * app.py:457-517). The location is deterministic (the rows depend
     * only on the embedded sample DDL, not the fixture), so the static
-    * oracle SQL can name it. */
-  private val ddlRowsWritten = new java.util.concurrent.atomic.AtomicBoolean(false)
+    * oracle SQL can name it. The JVM's first call deletes what an
+    * older build left there: the oracle reads the same files, so stale
+    * rows would pass against themselves. [[PipelineQueries.buildOnce]]
+    * then writes them, and a write that fails is retried on the next
+    * call. */
   private[graft] val DdlRowsRoot: String =
     new java.io.File(sys.props("java.io.tmpdir"), "graft_ddl_assess_rows")
       .getAbsolutePath
+  private lazy val staleRowsDropped: Boolean =
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(DdlRowsRoot))
   private[graft] def ddlRowsDir(s: SparkSession): String = {
-    if (ddlRowsWritten.compareAndSet(false, true)) {
+    staleRowsDropped
+    PipelineQueries.buildOnce(s, DdlRowsRoot) { root =>
       import s.implicits._
       val parsed = Engine.parseDb2(db2Scripts(s, 8))
       val rows = Engine.assessRows(parsed).toDF().cache()
@@ -63,13 +69,13 @@ object DdlQueries {
           col("partitionScore").as("partition_score"),
           col("specialScore").as("special_score"))
         .coalesce(1).write.mode("overwrite")
-        .parquet(s"$DdlRowsRoot/assess")
+        .parquet(s"$root/assess")
       rows.select(col("scriptId").as("script_id"),
           col("tablePos").as("table_pos"), explode(col("typeDistribution")))
         .select(col("script_id"), col("table_pos"),
           col("key").as("base_type"), col("value").as("n_cols"))
         .coalesce(1).write.mode("overwrite")
-        .parquet(s"$DdlRowsRoot/types")
+        .parquet(s"$root/types")
       parsed.map { st =>
         val f = graft.assess.Assessor.aggregateFeatures(Seq(st.table))
         (st.scriptId, st.tablePos, f("editproc"), f("validproc"),
@@ -81,7 +87,7 @@ object DdlQueries {
           "check_constraints", "xml_columns", "graphic_columns",
           "lob_columns")
         .coalesce(1).write.mode("overwrite")
-        .parquet(s"$DdlRowsRoot/features")
+        .parquet(s"$root/features")
       // per-table RENDERED rows: the S6/O1 ordered-concat aggregation
       // above them gets the hash oracle (the render itself stays
       // golden/fuzz-pinned)
@@ -91,7 +97,7 @@ object DdlQueries {
         (st.scriptId, st.tablePos, ddl, ewi)
       }.toDF("script_id", "table_pos", "ddl", "ewi")
         .coalesce(1).write.mode("overwrite")
-        .parquet(s"$DdlRowsRoot/rendered")
+        .parquet(s"$root/rendered")
       // the S8 REPORT SINKS' paginated lines (assessment + conversion
       // reports, fixed timestamp): the per-script ordered-concat
       // SHA-256 twins above them give the two render sinks a direct
@@ -99,11 +105,11 @@ object DdlQueries {
       // byte-identically to the reference's generate_*_pdf)
       Engine.reportLines(db2Scripts(s, 8), generatedAt = "2026-01-01 00:00:00")
         .coalesce(1).write.mode("overwrite")
-        .parquet(s"$DdlRowsRoot/report_lines")
+        .parquet(s"$root/report_lines")
       Engine.conversionReportLines(db2Scripts(s, 8),
           generatedAt = "2026-01-01 00:00:00")
         .coalesce(1).write.mode("overwrite")
-        .parquet(s"$DdlRowsRoot/conv_report_lines")
+        .parquet(s"$root/conv_report_lines")
       // the Snowflake path's per-table rendered rows (P11-P16 parse +
       // M18-M20 render map-side); the A11-A12 per-script rollup above
       // them carries the hash oracle
@@ -122,11 +128,10 @@ object DdlQueries {
         }.toDF("script_id", "table_pos", "ddl", "ewi",
           "n_critical", "n_warning", "n_info")
         .coalesce(1).write.mode("overwrite")
-        .parquet(s"$DdlRowsRoot/sf_rendered")
+        .parquet(s"$root/sf_rendered")
       rows.unpersist()
       ()
     }
-    DdlRowsRoot
   }
 
   /** The Snowflake path's per-script rollup (A11-A12 class) over the

@@ -170,7 +170,7 @@ object Warc {
 
   /** The shared fixture-writer loop behind [[synthesizeFixture]] and
     * [[synthesizeBoilerplateFixture]]: deterministic file routing by
-    * id, odd files per-record-gzip'd, `_built` marker last. */
+    * id, odd files per-record-gzip'd. */
   private def synthesizeWith(docs: org.apache.spark.sql.DataFrame,
       outDir: String, nFiles: Int)(
       bytesFor: (Long, String) => Array[Byte]): Unit = {
@@ -198,10 +198,6 @@ object Warc {
           } else out.write(bytes)
         } finally out.close()
       }
-    val marker = new org.apache.hadoop.fs.Path(outDir, "_built")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val o = fs.create(marker, true)
-    try o.write("1\n".getBytes(StandardCharsets.UTF_8)) finally o.close()
   }
 
   /** Shared response-record builder: the HTML body, charset leg and
@@ -303,10 +299,6 @@ object Warc {
           } else out.write(bytes)
         } finally out.close()
       }
-    val marker = new org.apache.hadoop.fs.Path(outDir, "_built")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val o = fs.create(marker, true)
-    try o.write("1\n".getBytes(StandardCharsets.UTF_8)) finally o.close()
   }
 
   // ------------------------------------------------------------ parser

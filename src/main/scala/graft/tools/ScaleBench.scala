@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.PipelineQueries.buildOnce
+
 /** Empirical scale probe (not part of the driver contract): measures
   * how the heaviest pipeline queries' wall time grows from sf0.1 to a
   * generated 10× slice ("sf1"), so the 100 TB claims rest on a
@@ -93,10 +95,7 @@ object ScaleBench {
     }))
 
   private[tools] def generateSlice(spark: SparkSession, baseDir: String,
-      outDir: String, factor: Int): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$outDir/_DONE"))) return
+      outDir: String, factor: Int): Unit = buildOnce(spark, outDir) { outDir =>
     val copies = explode(sequence(lit(0), lit(factor - 1))).as("__c")
     val docs = spark.read.parquet(s"$baseDir/documents.parquet")
     docs.select(col("*"), copies)
@@ -121,7 +120,6 @@ object ScaleBench {
         col("label"))
       .repartition(32)
       .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
-    fs.create(new org.apache.hadoop.fs.Path(s"$outDir/_DONE"), true).close()
   }
 
   private def generateSf1(spark: SparkSession, baseDir: String,
@@ -158,14 +156,8 @@ object ScaleBench {
 
   private[tools] def buildIcebergTable(spark: SparkSession, baseDir: String,
       dir: String, factor: Int): Long = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bulkIdFile = new org.apache.hadoop.fs.Path(s"$dir/bulk_snapshot_id.txt")
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_DONE"))) {
-      val in = fs.open(bulkIdFile)
-      try new String(in.readAllBytes(), "UTF-8").trim.toLong
-      finally in.close()
-    } else {
+    val bulkIdFile = java.nio.file.Paths.get(dir, "bulk_snapshot_id.txt")
+    buildOnce(spark, dir) { dir =>
       val months = 12 * factor
       val orders = spark.read.parquet(s"$baseDir/orders.parquet")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
@@ -200,11 +192,9 @@ object ScaleBench {
           .repartition(1)
         graft.api.SchemaTranslator.appendIncrement(slice, icebergTdef, dir)
       }
-      val out = fs.create(bulkIdFile, true)
-      try out.write(bulkId.toString.getBytes("UTF-8")) finally out.close()
-      fs.create(new org.apache.hadoop.fs.Path(s"$dir/_DONE"), true).close()
-      bulkId
+      java.nio.file.Files.writeString(bulkIdFile, bulkId.toString)
     }
+    java.nio.file.Files.readString(bulkIdFile).trim.toLong
   }
 
   /** (pruned-read sec, files kept, files live, catch-up sec,
@@ -256,10 +246,8 @@ object ScaleBench {
       s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
       s
     }
-    val done = new java.io.File(wh, "_DONE")
-    if (!done.isFile) {
+    buildOnce(spark, wh) { _ =>
       val s = catalogSession()
-      graft.operators.PipelineQueries.clearWarehouse(s, wh)
       s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
       s.read.parquet(s"$baseDir/orders.parquet")
         .crossJoin(s.range(factor.toLong).toDF("r"))
@@ -276,8 +264,6 @@ object ScaleBench {
         |) PARTITIONED BY (bucket(16, K))""".stripMargin)
       s.sql(s"INSERT INTO $cat.db.spj_b " +
         s"SELECT k, p * 0.5 FROM spj_src_$factor WHERE k % 3 <> 2")
-      java.nio.file.Files.write(done.toPath, "1\n".getBytes("UTF-8"))
-      ()
     }
     val joinSql =
       s"""SELECT a.K AS k, a.PA + b.PB AS v
@@ -340,13 +326,7 @@ object ScaleBench {
     val dir = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_scale_meta_${n}_" +
         Integer.toHexString(baseDir.hashCode)).getAbsolutePath
-    val done = new java.io.File(dir, "_DONE")
-    if (!done.isFile) {
-      // a KILLED prior build leaves a partial commit chain that a
-      // fresh migrate would version-conflict against — rebuild clean
-      if (new java.io.File(dir).exists())
-        org.apache.hadoop.fs.FileSystem.getLocal(conf).delete(
-          new org.apache.hadoop.fs.Path(dir), true)
+    buildOnce(spark, dir) { _ =>
       import org.apache.spark.sql.types._
       val schema = StructType(Seq(
         StructField("K", LongType, nullable = false),
@@ -365,8 +345,6 @@ object ScaleBench {
           graft.sources.IcebergMaintenance.rewriteManifests(tdef, dir, conf)
         ()
       }
-      java.nio.file.Files.write(done.toPath, "1\n".getBytes("UTF-8"))
-      ()
     }
     val metaDir = java.nio.file.Paths.get(dir, "metadata")
     val headVersion = new String(java.nio.file.Files.readAllBytes(
@@ -383,8 +361,8 @@ object ScaleBench {
       val tPlan = (System.nanoTime() - t1) / 1e9
       (tOffset, tPlan, kept.size)
     }
-    // expiry IN PLACE as the probe's LAST measurement, then the cache
-    // marker is dropped so the next run rebuilds — a "throwaway copy"
+    // expiry IN PLACE as the probe's LAST measurement, then the table
+    // is dropped so the next run rebuilds — a "throwaway copy"
     // is a trap here: Iceberg metadata records ABSOLUTE paths, so
     // expiring a copied tree followed the copy's metadata back into
     // the ORIGINAL table and deleted its files (found when the second
@@ -396,7 +374,8 @@ object ScaleBench {
     val t3 = System.nanoTime()
     graft.sources.IcebergSnapshot.currentSnapshotId(dir, conf)
     val tOffsetAfter = (System.nanoTime() - t3) / 1e6
-    java.nio.file.Files.deleteIfExists(done.toPath)
+    org.apache.hadoop.fs.FileSystem.getLocal(conf)
+      .delete(new org.apache.hadoop.fs.Path(dir), true)
     Map(
       "n_snapshots" -> n.toDouble,
       "meta_bytes" -> metaBytes.toDouble,
@@ -577,7 +556,7 @@ object ScaleBench {
       val dir = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_scale_zorder_${tag}_${factor}x_" +
           Integer.toHexString(baseDir.hashCode)).getAbsolutePath
-      if (!new java.io.File(dir, "_DONE").isFile) {
+      buildOnce(spark, dir) { dir =>
         val orders = spark.read.parquet(s"$baseDir/orders.parquet")
           .select(col("o_orderkey"))
         val copies = explode(sequence(lit(0), lit(factor - 1))).as("__c")
@@ -598,11 +577,7 @@ object ScaleBench {
             "A", "B", targetBytes = math.max(1L, bytes / nFiles))
           ()
         }
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(dir, "_DONE"), "1\n".getBytes("UTF-8"))
-        ()
       }
-      dir
     }
     val arrival = build(zordered = false)
     val zord = build(zordered = true)
@@ -651,7 +626,7 @@ object ScaleBench {
     val dir = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_scale_hidden_${factor}x_" +
         Integer.toHexString(baseDir.hashCode)).getAbsolutePath
-    if (!new java.io.File(dir, "_DONE").isFile) {
+    buildOnce(spark, dir) { dir =>
       val days = 30 * factor
       val orders = spark.read.parquet(s"$baseDir/orders.parquet")
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -669,9 +644,6 @@ object ScaleBench {
         .repartition(days, col("__day"))
         .drop("__day")
       graft.api.SchemaTranslator.migrateTable(rows, tdef, dir)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(dir, "_DONE"), "1\n".getBytes("UTF-8"))
-      ()
     }
     val lo = java.time.LocalDateTime.parse("2024-01-08T00:00:00")
     val hi = java.time.LocalDateTime.parse("2024-01-15T00:00:00")
@@ -861,11 +833,7 @@ object ScaleDeep {
     val queries = graft.SparkEntry.queries
     def productionProbe(dir: String): org.apache.spark.sql.DataFrame = {
       // same prebuilt index q60_indexed_probe uses; production params
-      val (idx, built) = graft.operators.PipelineQueries
-        .amortizedIndexPath(spark, dir, "ivfpq_index",
-          p => graft.operators.IvfPq.indexExists(spark, p),
-          table = "embeddings")
-      require(built, s"q60_indexed_probe must have built the index at $dir")
+      val idx = graft.operators.PipelineQueries.ivfPqIndex(spark, dir)
       val queries = graft.operators.IvfPq.vectorsTable(spark, idx,
         graft.operators.IvfPq.currentVersion(spark, idx))
         .filter(col("vec_id") < 10)
