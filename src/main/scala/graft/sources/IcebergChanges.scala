@@ -43,39 +43,24 @@ import IcebergSnapshot._
   * range, 0-based — commit order, not timestamp order). */
 object IcebergChanges {
 
-  /** (chain, main head id) — the default `toSnapshotId` is the MAIN
-    * head, not the array tail: a staged WAP branch snapshot must not
-    * leak into an unbounded incremental read. */
-  private def chainOf(spark: SparkSession, tablePath: String)
-      : (Seq[IcebergMetadata.SnapshotMeta], Option[Long]) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val metadataDir = new Path(tablePath, "metadata")
-    val version = readVersionHint(metadataDir, conf)
-    val metaText = readText(
-      new Path(metadataDir, s"v$version.metadata.json"), conf)
-    val chain = parseSnapshots(metaText)
-    (chain, currentSnapshotOf(metaText, chain).map(_.snapshotId))
-  }
-
   /** Snapshots strictly after `fromId` (None = table creation) up to
     * and including `toId` (None = current), in commit order — filtered
     * to the `toId` head's PARENT-LINK ancestry first, not array
     * position: with a WAP branch staged mid-chain ([A, B_staged,
     * C_main]) a read over (A, C] must not surface the unpublished B as
     * a committed insert. A caller that explicitly bounds at a staged
-    * branch head gets that branch's coherent ancestry instead. */
-  private def range(chain: Seq[IcebergMetadata.SnapshotMeta],
-      fromId: Option[Long], toId: Option[Long])
-      : Seq[IcebergMetadata.SnapshotMeta] = {
-    val head = toId.map { id =>
+    * branch head gets that branch's coherent ancestry instead. The
+    * default `toId` is the MAIN head, not the array tail: a staged WAP
+    * branch snapshot must not leak into an unbounded read. */
+  private def range(head: TableHead, fromId: Option[Long],
+      toId: Option[Long]): Seq[IcebergMetadata.SnapshotMeta] = {
+    val chain = head.chain
+    val to = toId.map { id =>
       val s = chain.find(_.snapshotId == id)
       require(s.isDefined, s"to-snapshot $id not in the retained chain")
       s.get
-    }.orElse(chain.lastOption)
-    val byId = chain.map(s => s.snapshotId -> s).toMap
-    val ancestry = Iterator.iterate(head)(_.flatMap(_.parentSnapshotId)
-      .flatMap(byId.get)).takeWhile(_.isDefined)
-      .map(_.get.snapshotId).toSet
+    }.orElse(head.main)
+    val ancestry = to.toSeq.flatMap(head.ancestry).map(_.snapshotId).toSet
     val upto = chain.filter(s => ancestry.contains(s.snapshotId))
     fromId.fold(upto) { id =>
       val i = upto.indexWhere(_.snapshotId == id)
@@ -85,6 +70,9 @@ object IcebergChanges {
       upto.drop(i + 1)
     }
   }
+
+  private def headOf(spark: SparkSession, tablePath: String): TableHead =
+    TableHead.read(tablePath, spark.sparkContext.hadoopConfiguration)
 
   private def emptyLike(spark: SparkSession, table: TableDef): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -106,9 +94,7 @@ object IcebergChanges {
       toSnapshotId: Option[Long] = None,
       strict: Boolean = true,
       pruning: Seq[IcebergPruning.ColumnBound] = Nil): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val (chain, mainId) = chainOf(spark, tablePath)
-    val snaps = range(chain, fromSnapshotId, toSnapshotId.orElse(mainId))
+    val snaps = range(headOf(spark, tablePath), fromSnapshotId, toSnapshotId)
     // ordinals count REPLACE snapshots (which emit no rows but consume
     // a range position) so all three incremental faces — this one,
     // changesTable, incrementalChangesScan — number the same (from,to]
@@ -189,9 +175,9 @@ object IcebergChanges {
   def changesTable(spark: SparkSession, tablePath: String, table: TableDef,
       fromSnapshotId: Option[Long],
       toSnapshotId: Option[Long] = None): DataFrame = {
-    val (chain, mainId) = chainOf(spark, tablePath)
-    val snaps = range(chain, fromSnapshotId, toSnapshotId.orElse(mainId))
-    val byId = chain.map(s => s.snapshotId -> s).toMap
+    val head = headOf(spark, tablePath)
+    val snaps = range(head, fromSnapshotId, toSnapshotId)
+    val byId = head.chain.map(s => s.snapshotId -> s).toMap
     def stateAt(id: Option[Long]): DataFrame = id match {
       case None => emptyLike(spark, table)
       case Some(s) =>
@@ -251,9 +237,9 @@ object IcebergChanges {
       maxInKeys: Int = 10000): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
     val conf = spark.sparkContext.hadoopConfiguration
-    val (chain, mainId) = chainOf(spark, tablePath)
-    val snaps = range(chain, fromSnapshotId, toSnapshotId.orElse(mainId))
-    val byId = chain.map(s => s.snapshotId -> s).toMap
+    val head = headOf(spark, tablePath)
+    val snaps = range(head, fromSnapshotId, toSnapshotId)
+    val byId = head.chain.map(s => s.snapshotId -> s).toMap
     val idToName = table.columns.zipWithIndex.map { case (c, i) =>
       c.fieldId.getOrElse(i + 1) -> c.name
     }.toMap

@@ -1,8 +1,5 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
-import java.util.UUID
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -105,27 +102,6 @@ object IcebergDeletes {
     }
   }
 
-  private def loadCurrent(tablePath: String,
-      conf: org.apache.hadoop.conf.Configuration) = {
-    val metadataDir = new Path(tablePath, "metadata")
-    val fs = FileSystem.get(metadataDir.toUri, conf)
-    val version = readVersionHint(metadataDir, conf)
-    require(version >= 2, s"no committed snapshot (version $version)")
-    val metaText = readText(
-      new Path(metadataDir, s"v$version.metadata.json"), conf)
-    val chain = parseSnapshots(metaText)
-    require(chain.nonEmpty, "metadata carries no snapshots")
-    // the MAIN head, not the array tail — a staged WAP branch snapshot
-    // may trail it (see IcebergSnapshot.currentSnapshotOf)
-    (metadataDir, fs, version, chain,
-      IcebergSnapshot.currentSnapshotOf(metaText, chain).get)
-  }
-
-  private def snapshotIdFor(table: TableDef, seq: Long): Long =
-    UUID.nameUUIDFromBytes(
-      (table.fullName + s"-snapshot-$seq").getBytes(StandardCharsets.UTF_8))
-      .getMostSignificantBits & Long.MaxValue
-
   /** Delete the rows matching `predicate` from the CURRENT snapshot as
     * a new DELETE snapshot of position delete files. The predicate may
     * reference identity-partition columns (restored from manifests
@@ -145,7 +121,8 @@ object IcebergDeletes {
       timestampMs: Long = System.currentTimeMillis(),
       pruning: Seq[IcebergPruning.ColumnBound] = Nil): IcebergMetadata.SnapshotMeta = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val (metadataDir, fs, version, chain, current) = loadCurrent(tablePath, conf)
+    val head = TableHead.read(tablePath, conf)
+    val current = head.requireMain()
     val priorList = readManifestList(new Path(current.manifestList), conf)
     val allLive = liveFilesWithSeq(priorList, table, conf)
     val live = allLive.filter { case (f, _) =>
@@ -179,9 +156,8 @@ object IcebergDeletes {
         col("__graft_file").as("__graft_key"),
         col("__graft_pos").as("pos")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try commitDeltaCore(spark, table, tablePath, matched, partTuples,
-      specEvolved, newFiles = Nil, metadataDir, fs, version, chain,
-      current, priorList, timestampMs)
+    try commitDeltaCore(spark, table, head, current, priorList, matched,
+      partTuples, specEvolved, newFiles = Nil, timestampMs)
     finally matched.unpersist()
   }
 
@@ -214,7 +190,8 @@ object IcebergDeletes {
       timestampMs: Long = System.currentTimeMillis(),
       expectedHeadId: Option[Long] = None): IcebergMetadata.SnapshotMeta = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val (metadataDir, fs, version, chain, current) = loadCurrent(tablePath, conf)
+    val head = TableHead.read(tablePath, conf)
+    val current = head.requireMain()
     expectedHeadId.foreach { id =>
       if (id != current.snapshotId)
         throw new CommitConflictException(
@@ -245,9 +222,8 @@ object IcebergDeletes {
           "a delete row's (file, pos) no longer resolves to a live " +
             "data file — the table state moved since the read; " +
             "re-derive and retry")
-      commitDeltaCore(spark, table, tablePath, matched, partTuples,
-        specEvolved, newFiles, metadataDir, fs, version, chain, current,
-        priorList, timestampMs)
+      commitDeltaCore(spark, table, head, current, priorList, matched,
+        partTuples, specEvolved, newFiles, timestampMs)
     } finally { matched.unpersist(); () }
   }
 
@@ -258,22 +234,20 @@ object IcebergDeletes {
     * plus a delete manifest — and commit. Returns `current` unchanged
     * when there is nothing to commit. */
   private def commitDeltaCore(spark: SparkSession, table: TableDef,
-      tablePath: String, matched: DataFrame,
+      head: TableHead, current: IcebergMetadata.SnapshotMeta,
+      priorList: Seq[org.apache.avro.generic.GenericRecord],
+      matched: DataFrame,
       partTuples: Map[Seq[Option[Any]], Int], specEvolved: Boolean,
       newFiles: Seq[DataFileInfo],
-      metadataDir: Path, fs: FileSystem, version: Int,
-      chain: Seq[IcebergMetadata.SnapshotMeta],
-      current: IcebergMetadata.SnapshotMeta,
-      priorList: Seq[org.apache.avro.generic.GenericRecord],
       timestampMs: Long): IcebergMetadata.SnapshotMeta = {
     val conf = spark.sparkContext.hadoopConfiguration
+    val fs = FileSystem.get(head.metadataDir.toUri, conf)
     // bounded: one row per partition tuple with matches
     val perPart = matched.groupBy("__part").count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     if (perPart.isEmpty && newFiles.isEmpty) return current
 
-    val newSeq = chain.map(_.sequenceNumber).max + 1
-    val snapshotId = snapshotIdFor(table, newSeq)
+    val next = head.next(table)
     val fpMeta = new MetadataBuilder()
       .putLong("parquet.field.id", DeleteFilePathFieldId).build()
     val posMeta = new MetadataBuilder()
@@ -288,7 +262,7 @@ object IcebergDeletes {
         // repartition on __part lands each ordinal in exactly one
         // task, so partitionBy writes ONE file per ordinal; the sort
         // keeps the spec's (file_path, pos) order inside each file.
-        val base = new Path(tablePath, s"deletes/pos-$newSeq")
+        val base = new Path(head.tablePath, s"deletes/pos-${next.seq}")
         requireFieldIdWrite(spark)
         matched.select(col("file_path").as("file_path", fpMeta),
             col("pos").as("pos", posMeta), col("__part"))
@@ -305,64 +279,20 @@ object IcebergDeletes {
         }
       }
 
-    var ordinal = priorList.size
-    val nRows = newFiles.map(_.recordCount).sum
-    val dataManifest =
-      if (newFiles.isEmpty) None
-      else {
-        val m = writeManifest(table, newFiles, metadataDir, snapshotId,
-          conf, ordinal = ordinal)
-        ordinal += 1
-        Some(m)
-      }
     val posSpec = if (specEvolved) UnpartitionedSpecId else 0
-    val nDeletes = deleteFiles.map(_.recordCount).sum
-    val deleteManifest =
-      if (deleteFiles.isEmpty) None
-      else Some(writeManifestEntries(table,
-        deleteFiles.map(f => ManifestEntry(1, None, f)), metadataDir,
-        snapshotId, conf, ordinal = ordinal, specId = posSpec))
-    val rows =
-      dataManifest.toSeq.map { case (p, len) =>
-        ManifestListRow(p.toString, len, newSeq, newSeq,
-          newFiles.size, 0, 0, nRows, 0L, 0L,
-          specId = IcebergMetadata.defaultSpecIdOf(table))
-      } ++
-        deleteManifest.toSeq.map { case (p, len) =>
-          ManifestListRow(p.toString, len,
-            sequenceNumber = newSeq, minSequenceNumber = newSeq,
-            addedFiles = deleteFiles.size, existingFiles = 0,
-            deletedFiles = 0,
-            addedRows = nDeletes, existingRows = 0L, deletedRows = 0L,
-            content = 1, specId = posSpec)
-        }
-    val listPath = writeManifestListRows(table, rows, metadataDir,
-      snapshotId, conf, newSeq, Some(current.snapshotId),
-      priorManifests = priorList)
+    val dataRows =
+      if (newFiles.isEmpty) Nil
+      else Seq(next.addedManifest(newFiles, priorList.size))
+    val deleteRows =
+      if (deleteFiles.isEmpty) Nil
+      else Seq(next.addedManifest(deleteFiles, priorList.size + dataRows.size,
+        specId = posSpec, content = 1))
     val operation =
       if (deleteFiles.isEmpty) "append"
       else if (newFiles.isEmpty) "delete"
       else "overwrite"
-    val snap = IcebergMetadata.SnapshotMeta(
-      snapshotId = snapshotId,
-      schemaId = table.schemaId,
-      timestampMs = timestampMs,
-      manifestList = listPath.toString,
-      addedFiles = newFiles.size.toLong,
-      addedRecords = nRows,
-      sequenceNumber = newSeq,
-      parentSnapshotId = Some(current.snapshotId),
-      totalFiles = current.cumulativeFiles + newFiles.size,
-      totalRecords = current.cumulativeRecords + nRows,
-      operation = operation,
-      addedDeleteFiles = deleteFiles.size.toLong,
-      addedPositionDeletes = nDeletes,
-      totalDeleteFiles = current.totalDeleteFiles + deleteFiles.size,
-      totalPositionDeletes = current.totalPositionDeletes + nDeletes,
-      totalEqualityDeletes = current.totalEqualityDeletes)
-    writeNewMetadataVersion(table, tablePath, metadataDir, fs, version,
-      chain :+ snap, timestampMs)
-    snap
+    head.commitSnapshot(next, current, operation, dataRows ++ deleteRows,
+      timestampMs, added = newFiles ++ deleteFiles, carried = priorList)
   }
 
   /** Commit an upsert: the data files appended under `data/` since the
@@ -385,7 +315,9 @@ object IcebergDeletes {
       keys: DataFrame, timestampMs: Long = System.currentTimeMillis(),
       extraProperties: Map[String, String] = Map.empty): IcebergMetadata.SnapshotMeta = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val (metadataDir, fs, version, chain, current) = loadCurrent(tablePath, conf)
+    val head = TableHead.read(tablePath, conf)
+    val current = head.requireMain()
+    val fs = FileSystem.get(head.metadataDir.toUri, conf)
     val priorList = readManifestList(new Path(current.manifestList), conf)
 
     val keyCols = keys.columns.toSeq
@@ -399,17 +331,8 @@ object IcebergDeletes {
         "and absent from data files; upsert on them is not supported")
     val equalityIds = keyCols.map(colIds)
 
-    // chain-wide known set: a compaction drops older tombstone
-    // manifests from the current list, so diffing against it alone
-    // would resurrect still-on-disk time-travel files (see
-    // IcebergSnapshot.knownFilePaths)
-    val known = IcebergSnapshot.knownFilePaths(chain, conf)
-    val newFiles = listDataFiles(new Path(tablePath, "data"), table, conf,
-        skipPaths = known)
-      .filterNot(f => known.contains(f.path))
-
-    val newSeq = chain.map(_.sequenceNumber).max + 1
-    val snapshotId = snapshotIdFor(table, newSeq)
+    val newFiles = head.newDataFiles(table)
+    val next = head.next(table)
 
     // global (spec-1) equality delete files, PARTITIONED: distinct
     // keys hash-bucket across ceil(nKeys / keys-per-file) parallel
@@ -419,14 +342,14 @@ object IcebergDeletes {
     // Fixture-scale batches still produce a single file; every written
     // file gets its own manifest entry (spec-legal: equality deletes
     // compose by union).
-    val delDir = new Path(tablePath, s"deletes/eq-$newSeq")
+    val delDir = new Path(tablePath, s"deletes/eq-${next.seq}")
     val distinctKeys = keys.select(keyCols.map { k =>
       val meta = new MetadataBuilder()
         .putLong("parquet.field.id", colIds(k).toLong).build()
       col(k).as(k, meta)
     }: _*).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (delFiles, nKeys) = try {
+    val delFiles = try {
       val n = distinctKeys.count()
       val target = spark.conf
         .get("graft.rowlevel.eq-delete-keys-per-file", "1000000").toLong
@@ -449,61 +372,22 @@ object IcebergDeletes {
             partitionValues = Nil, content = 2,
             equalityIds = equalityIds))
         }
-      (infos, n)
+      infos
     } finally { distinctKeys.unpersist(); () }
 
-    var ordinal = priorList.size
-    val dataManifest =
-      if (newFiles.isEmpty) None
-      else {
-        val m = writeManifest(table, newFiles, metadataDir, snapshotId, conf,
-          ordinal = ordinal)
-        ordinal += 1
-        Some(m)
-      }
+    val dataRows =
+      if (newFiles.isEmpty) Nil
+      else Seq(next.addedManifest(newFiles, priorList.size))
     // an empty key batch (all-insert upsert) commits no delete
     // manifest at all — a pure append, never an empty manifest
-    val deleteManifest =
-      if (delFiles.isEmpty) None
-      else Some(writeManifestEntries(table,
-        delFiles.map(f => ManifestEntry(1, None, f)), metadataDir,
-        snapshotId, conf, ordinal = ordinal,
-        specId = UnpartitionedSpecId))
-
-    val nRows = newFiles.map(_.recordCount).sum
-    val rows =
-      dataManifest.toSeq.map { case (p, len) =>
-        ManifestListRow(p.toString, len, newSeq, newSeq,
-          newFiles.size, 0, 0, nRows, 0L, 0L,
-          specId = IcebergMetadata.defaultSpecIdOf(table))
-      } ++
-        deleteManifest.toSeq.map { case (p, len) =>
-          ManifestListRow(p.toString, len,
-            newSeq, newSeq, delFiles.size, 0, 0, nKeys, 0L, 0L,
-            content = 1, specId = UnpartitionedSpecId)
-        }
-    val listPath = writeManifestListRows(table, rows, metadataDir, snapshotId,
-      conf, newSeq, Some(current.snapshotId), priorManifests = priorList)
-    val snap = IcebergMetadata.SnapshotMeta(
-      snapshotId = snapshotId,
-      schemaId = table.schemaId,
-      timestampMs = timestampMs,
-      manifestList = listPath.toString,
-      addedFiles = newFiles.size.toLong,
-      addedRecords = nRows,
-      sequenceNumber = newSeq,
-      parentSnapshotId = Some(current.snapshotId),
-      totalFiles = current.cumulativeFiles + newFiles.size,
-      totalRecords = current.cumulativeRecords + nRows,
-      operation = if (newFiles.isEmpty) "delete" else "overwrite",
-      addedDeleteFiles = delFiles.size.toLong,
-      addedEqualityDeletes = nKeys,
-      totalDeleteFiles = current.totalDeleteFiles + delFiles.size,
-      totalPositionDeletes = current.totalPositionDeletes,
-      totalEqualityDeletes = current.totalEqualityDeletes + nKeys)
-    writeNewMetadataVersion(table, tablePath, metadataDir, fs, version,
-      chain :+ snap, timestampMs, addProperties = extraProperties)
-    snap
+    val deleteRows =
+      if (delFiles.isEmpty) Nil
+      else Seq(next.addedManifest(delFiles, priorList.size + dataRows.size,
+        specId = UnpartitionedSpecId, content = 1))
+    head.commitSnapshot(next, current,
+      if (newFiles.isEmpty) "delete" else "overwrite",
+      dataRows ++ deleteRows, timestampMs, added = newFiles ++ delFiles,
+      carried = priorList, addProperties = extraProperties)
   }
 
   /** Major compaction: materialize the CURRENT snapshot's net rows
@@ -522,14 +406,14 @@ object IcebergDeletes {
   def compactWithDeletes(spark: SparkSession, table: TableDef,
       tablePath: String, timestampMs: Long = System.currentTimeMillis()): IcebergMetadata.SnapshotMeta = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val (metadataDir, fs, version, chain, current) = loadCurrent(tablePath, conf)
+    val head = TableHead.read(tablePath, conf)
+    val current = head.requireMain()
+    val fs = FileSystem.get(head.metadataDir.toUri, conf)
     val priorList = readManifestList(new Path(current.manifestList), conf)
     val liveData = liveFilesWithSeq(priorList, table, conf)
     val liveDeletes = liveDeleteFiles(priorList, conf)
     if (liveDeletes.isEmpty) return current // nothing to fold in
-
-    val newSeq = chain.map(_.sequenceNumber).max + 1
-    val snapshotId = snapshotIdFor(table, newSeq)
+    val next = head.next(table)
 
     // net rows via the same delete-applying read the scan path uses;
     // written back per partition tuple to preserve the layout. Once
@@ -540,9 +424,8 @@ object IcebergDeletes {
     // real engine's rewrite_data_files migrates after spec evolution.
     val net = readSnapshot(spark, tablePath, table)
     if (table.partitionSpecs.nonEmpty)
-      return compactEvolvedSpec(spark, table, tablePath, timestampMs,
-        metadataDir, fs, version, chain, current, priorList, liveData,
-        liveDeletes, net)
+      return compactEvolvedSpec(spark, table, head, next, current, priorList,
+        liveData, liveDeletes, net, timestampMs)
     val pf = partitionFields(table)
     val identityCols = pf.filter(_._3 == "identity").map(_._1)
     val partTuples = liveData.map(_._1.partitionValues).distinct
@@ -623,7 +506,7 @@ object IcebergDeletes {
     // sub-splitting preserves PER-FILE sort order, which is what the
     // spec's per-file sort-order id claims — compactDataFiles' bins
     // carry the same semantics)
-    val base = new Path(tablePath, s"data/rewrite-$newSeq")
+    val base = new Path(tablePath, s"data/rewrite-${next.seq}")
     requireFieldIdWrite(spark)
     withPart.select(keepCols.map(col) ++ Seq(col("__part"),
         pmod(xxhash64(keepCols.map(col): _*), col("__nsub"))
@@ -658,65 +541,41 @@ object IcebergDeletes {
     // consumed delete files
     val dataEntries = rewritten.map(f => ManifestEntry(1, None, f)) ++
       liveData.map { case (f, seq) => ManifestEntry(2, Some(seq), f) }
-    val dataManifest = writeManifestEntries(table, dataEntries, metadataDir,
-      snapshotId, conf, ordinal = priorList.size)
+    val dataManifest = next.manifest(dataEntries, priorList.size)
     // delete files are per-partition (spec-0) for position deletes and
     // global (spec-1) for equality deletes; retire each under its spec
     val (eqDels, posDels) = liveDeletes.partition(_.content == 2)
     def retire(dels: Seq[DeleteFileRef], specId: Int, ord: Int) =
       if (dels.isEmpty) None
-      else Some((writeManifestEntries(table,
-        dels.map(d => ManifestEntry(2, Some(d.seq), DataFileInfo(
-          d.path, d.sizeBytes, d.recordCount,
-          partitionValues = d.partitionValues,
-          content = d.content, equalityIds = d.equalityIds))),
-        metadataDir, snapshotId, conf, ordinal = ord, specId = specId),
+      else Some((next.manifest(
+        dels.map(d => ManifestEntry(2, Some(d.seq), d.asFileInfo)), ord, specId),
         dels.size))
     val posManifest = retire(posDels, 0, priorList.size + 1)
     val eqManifest = retire(eqDels, UnpartitionedSpecId, priorList.size + 2)
 
-    val nRows = rewritten.map(_.recordCount).sum
     val retiring =
       posManifest.map { case ((p, len), n) => (p, len, n, 0) }.toSeq ++
         eqManifest.map { case ((p, len), n) =>
           (p, len, n, UnpartitionedSpecId)
         }.toSeq
     val rows = Seq(ManifestListRow(dataManifest._1.toString, dataManifest._2,
-      sequenceNumber = newSeq,
-      minSequenceNumber = (newSeq +: liveData.map(_._2)).min,
+      sequenceNumber = next.seq,
+      minSequenceNumber = (next.seq +: liveData.map(_._2)).min,
       addedFiles = rewritten.size, existingFiles = 0,
       deletedFiles = liveData.size,
-      addedRows = nRows, existingRows = 0L,
+      addedRows = rewritten.map(_.recordCount).sum, existingRows = 0L,
       deletedRows = liveData.map(_._1.recordCount).sum)) ++
       retiring.map { case (p, len, n, specId) =>
         ManifestListRow(p.toString, len,
-          sequenceNumber = newSeq,
-          minSequenceNumber = (newSeq +: liveDeletes.map(_.seq)).min,
+          sequenceNumber = next.seq,
+          minSequenceNumber = (next.seq +: liveDeletes.map(_.seq)).min,
           addedFiles = 0, existingFiles = 0, deletedFiles = n,
           addedRows = 0L, existingRows = 0L, deletedRows = 0L,
           content = 1, specId = specId)
       }
-    val listPath = writeManifestListRows(table, rows, metadataDir, snapshotId,
-      conf, newSeq, Some(current.snapshotId))
-    val snap = IcebergMetadata.SnapshotMeta(
-      snapshotId = snapshotId,
-      schemaId = table.schemaId,
-      timestampMs = timestampMs,
-      manifestList = listPath.toString,
-      addedFiles = rewritten.size.toLong,
-      addedRecords = nRows,
-      sequenceNumber = newSeq,
-      parentSnapshotId = Some(current.snapshotId),
-      totalFiles = rewritten.size.toLong,
-      totalRecords = nRows,
-      operation = "replace",
-      deletedFiles = liveData.size.toLong,
-      deletedRecords = liveData.map(_._1.recordCount).sum,
-      totalDeleteFiles = 0L, totalPositionDeletes = 0L,
-      totalEqualityDeletes = 0L)
-    writeNewMetadataVersion(table, tablePath, metadataDir, fs, version,
-      chain :+ snap, timestampMs)
-    snap
+    head.commitSnapshot(next, current, "replace", rows, timestampMs,
+      added = rewritten,
+      removed = liveData.map(_._1) ++ liveDeletes.map(_.asFileInfo))
   }
 
   /** [[compactWithDeletes]] once partition specs have evolved: the
@@ -727,17 +586,14 @@ object IcebergDeletes {
     * spec, and retired delete files group by the spec they were
     * written under. */
   private def compactEvolvedSpec(spark: SparkSession, table: TableDef,
-      tablePath: String, timestampMs: Long,
-      metadataDir: Path, fs: FileSystem, version: Int,
-      chain: Seq[IcebergMetadata.SnapshotMeta],
+      head: TableHead, next: NextSnapshot,
       current: IcebergMetadata.SnapshotMeta,
       priorList: Seq[org.apache.avro.generic.GenericRecord],
       liveData: Seq[(DataFileInfo, Long)],
       liveDeletes: Seq[DeleteFileRef],
-      net: DataFrame): IcebergMetadata.SnapshotMeta = {
+      net: DataFrame, timestampMs: Long): IcebergMetadata.SnapshotMeta = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val newSeq = chain.map(_.sequenceNumber).max + 1
-    val snapshotId = snapshotIdFor(table, newSeq)
+    val fs = FileSystem.get(head.metadataDir.toUri, conf)
     val sid = IcebergMetadata.defaultSpecIdOf(table)
     val defs = IcebergMetadata.specFieldDefs(table, sid)
     val pf = partitionFieldsOf(table, sid)
@@ -829,7 +685,7 @@ object IcebergDeletes {
               org.apache.spark.sql.functions.broadcast(tuplesDf), joinCond)
             .select(outCols :+ col("__part"): _*)
         }
-      val base = new Path(tablePath, s"data/rewrite-$newSeq")
+      val base = new Path(head.tablePath, s"data/rewrite-${next.seq}")
       requireFieldIdWrite(spark)
       withPart
         .withColumn("__sub",
@@ -864,66 +720,42 @@ object IcebergDeletes {
       // their original specs — one manifest per spec group
       var ordinal = priorList.size
       def nextOrdinal(): Int = { val o = ordinal; ordinal += 1; o }
-      val addedManifest = writeManifestEntries(table,
-        rewritten.map(f => ManifestEntry(1, None, f)), metadataDir,
-        snapshotId, conf, ordinal = nextOrdinal(), specId = sid)
+      val addedManifest = next.manifest(
+        rewritten.map(f => ManifestEntry(1, None, f)), nextOrdinal(), sid)
       val retiredDataRows = liveData.groupBy(_._1.specId).toSeq.sortBy(_._1)
         .map { case (s, lf) =>
-          val m = writeManifestEntries(table,
+          val m = next.manifest(
             lf.map { case (f, seq) => ManifestEntry(2, Some(seq), f) },
-            metadataDir, snapshotId, conf, ordinal = nextOrdinal(), specId = s)
+            nextOrdinal(), s)
           ManifestListRow(m._1.toString, m._2,
-            sequenceNumber = newSeq,
-            minSequenceNumber = (newSeq +: lf.map(_._2)).min,
+            sequenceNumber = next.seq,
+            minSequenceNumber = (next.seq +: lf.map(_._2)).min,
             addedFiles = 0, existingFiles = 0, deletedFiles = lf.size,
             addedRows = 0L, existingRows = 0L,
             deletedRows = lf.map(_._1.recordCount).sum, specId = s)
         }
       val retiredDeleteRows = liveDeletes.groupBy(_.specId).toSeq.sortBy(_._1)
         .map { case (s, dels) =>
-          val m = writeManifestEntries(table,
-            dels.map(d => ManifestEntry(2, Some(d.seq), DataFileInfo(
-              d.path, d.sizeBytes, d.recordCount,
-              partitionValues = d.partitionValues,
-              content = d.content, equalityIds = d.equalityIds,
-              specId = s))),
-            metadataDir, snapshotId, conf, ordinal = nextOrdinal(), specId = s)
+          val m = next.manifest(
+            dels.map(d => ManifestEntry(2, Some(d.seq), d.asFileInfo)),
+            nextOrdinal(), s)
           ManifestListRow(m._1.toString, m._2,
-            sequenceNumber = newSeq,
-            minSequenceNumber = (newSeq +: dels.map(_.seq)).min,
+            sequenceNumber = next.seq,
+            minSequenceNumber = (next.seq +: dels.map(_.seq)).min,
             addedFiles = 0, existingFiles = 0, deletedFiles = dels.size,
             addedRows = 0L, existingRows = 0L, deletedRows = 0L,
             content = 1, specId = s)
         }
 
-      val nRows = rewritten.map(_.recordCount).sum
       val rows = ManifestListRow(addedManifest._1.toString, addedManifest._2,
-        sequenceNumber = newSeq,
-        minSequenceNumber = (newSeq +: liveData.map(_._2)).min,
+        sequenceNumber = next.seq,
+        minSequenceNumber = (next.seq +: liveData.map(_._2)).min,
         addedFiles = rewritten.size, existingFiles = 0, deletedFiles = 0,
-        addedRows = nRows, existingRows = 0L, deletedRows = 0L,
-        specId = sid) +: (retiredDataRows ++ retiredDeleteRows)
-      val listPath = writeManifestListRows(table, rows, metadataDir,
-        snapshotId, conf, newSeq, Some(current.snapshotId))
-      val snap = IcebergMetadata.SnapshotMeta(
-        snapshotId = snapshotId,
-        schemaId = table.schemaId,
-        timestampMs = timestampMs,
-        manifestList = listPath.toString,
-        addedFiles = rewritten.size.toLong,
-        addedRecords = nRows,
-        sequenceNumber = newSeq,
-        parentSnapshotId = Some(current.snapshotId),
-        totalFiles = rewritten.size.toLong,
-        totalRecords = nRows,
-        operation = "replace",
-        deletedFiles = liveData.size.toLong,
-        deletedRecords = liveData.map(_._1.recordCount).sum,
-        totalDeleteFiles = 0L, totalPositionDeletes = 0L,
-        totalEqualityDeletes = 0L)
-      writeNewMetadataVersion(table, tablePath, metadataDir, fs, version,
-        chain :+ snap, timestampMs)
-      snap
+        addedRows = rewritten.map(_.recordCount).sum, existingRows = 0L,
+        deletedRows = 0L, specId = sid) +: (retiredDataRows ++ retiredDeleteRows)
+      head.commitSnapshot(next, current, "replace", rows, timestampMs,
+        added = rewritten,
+        removed = liveData.map(_._1) ++ liveDeletes.map(_.asFileInfo))
     } finally { netP.unpersist(false); () }
   }
 }

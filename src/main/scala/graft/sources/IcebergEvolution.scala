@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
 
 import graft.model.{Db2Column, TableDef}
 
@@ -361,15 +360,8 @@ object IcebergEvolution {
       timestampMs: Long = System.currentTimeMillis()): TableDef = {
     require(table.priorSchemas.nonEmpty || table.partitionSpecs.nonEmpty,
       "commitEvolution expects a table that has been through an evolution op")
-    val metadataDir = new Path(tablePath, "metadata")
-    val fs = FileSystem.get(metadataDir.toUri, conf)
-    val version = IcebergSnapshot.readVersionHint(metadataDir, conf)
-    val metaText = IcebergSnapshot.readText(
-      new Path(metadataDir, s"v$version.metadata.json"), conf)
-    val chain = IcebergSnapshot.parseSnapshots(metaText)
-    IcebergSnapshot.writeNewMetadataVersion(table, tablePath, metadataDir,
-      fs, version, chain, timestampMs,
-      currentIdOverride = IcebergSnapshot.currentIdOf(metaText))
+    IcebergSnapshot.TableHead.read(tablePath, conf)
+      .commitMetadata(table, timestampMs)
     table
   }
 }

@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 import graft.model.TableDef
 import IcebergSnapshot._
@@ -24,20 +23,8 @@ import IcebergSnapshot._
   * evolution) coexist in one relation. */
 object IcebergInspect {
 
-  private def currentMetaText(spark: SparkSession,
-      tablePath: String): String = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val metadataDir = new Path(tablePath, "metadata")
-    val version = readVersionHint(metadataDir, conf)
-    readText(new Path(metadataDir, s"v$version.metadata.json"), conf)
-  }
-
-  private def currentMetaJson(spark: SparkSession,
-      tablePath: String): JValue =
-    JsonMethods.parse(currentMetaText(spark, tablePath))
-
-  private def snapshotJsons(meta: JValue): Seq[JValue] =
-    (meta \ "snapshots").asInstanceOf[JArray].arr
+  private def headOf(spark: SparkSession, tablePath: String): TableHead =
+    TableHead.read(tablePath, spark.sparkContext.hadoopConfiguration)
 
   private def jLong(v: JValue): Long = v match {
     case JInt(n) => n.toLong
@@ -49,7 +36,7 @@ object IcebergInspect {
     * `t.snapshots` metadata table. */
   def snapshotsTable(spark: SparkSession, tablePath: String): DataFrame = {
     import spark.implicits._
-    snapshotJsons(currentMetaJson(spark, tablePath)).map { s =>
+    (headOf(spark, tablePath).json \ "snapshots").asInstanceOf[JArray].arr.map { s =>
       val summary = (s \ "summary") match {
         case JObject(fields) => fields.collect {
           case (k, JString(v)) => k -> v
@@ -76,19 +63,10 @@ object IcebergInspect {
     * the retained chain is the ancestor chain). */
   def historyTable(spark: SparkSession, tablePath: String): DataFrame = {
     import spark.implicits._
-    val meta = currentMetaJson(spark, tablePath)
-    val parents = snapshotJsons(meta).map { s =>
-      jLong(s \ "snapshot-id") -> ((s \ "parent-snapshot-id") match {
-        case JInt(p) => Some(p.toLong)
-        case _ => None
-      })
-    }.toMap
-    val current = jLong(meta \ "current-snapshot-id")
-    // walk the parent chain from the current snapshot
-    val ancestors = Iterator.iterate(Option(current))(
-        _.flatMap(parents.get).flatten)
-      .takeWhile(_.isDefined).flatten.toSet
-    (meta \ "snapshot-log").asInstanceOf[JArray].arr.map { e =>
+    val head = headOf(spark, tablePath)
+    val parents = head.chain.map(s => s.snapshotId -> s.parentSnapshotId).toMap
+    val ancestors = head.main.toSeq.flatMap(head.ancestry).map(_.snapshotId).toSet
+    (head.json \ "snapshot-log").asInstanceOf[JArray].arr.map { e =>
       val id = jLong(e \ "snapshot-id")
       (new java.sql.Timestamp(jLong(e \ "timestamp-ms")), id,
         parents.getOrElse(id, None), ancestors.contains(id))
@@ -99,8 +77,7 @@ object IcebergInspect {
   /** One row per named ref (including `main`): the `t.refs` table. */
   def refsTable(spark: SparkSession, tablePath: String): DataFrame = {
     import spark.implicits._
-    val meta = currentMetaJson(spark, tablePath)
-    val rows = (meta \ "refs") match {
+    val rows = (headOf(spark, tablePath).json \ "refs") match {
       case JObject(fields) => fields.map { case (name, v) =>
         (name, (v \ "type").asInstanceOf[JString].s,
           jLong(v \ "snapshot-id"))
@@ -120,12 +97,7 @@ object IcebergInspect {
       snapshotId: Option[Long] = None): DataFrame = {
     import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
-    val metaText = currentMetaText(spark, tablePath)
-    val chain = parseSnapshots(metaText)
-    val snap = snapshotId.fold(currentSnapshotOf(metaText, chain))(id =>
-      chain.find(_.snapshotId == id))
-      .getOrElse(throw new IllegalArgumentException(
-        s"snapshot ${snapshotId.getOrElse("<current>")} not found"))
+    val snap = headOf(spark, tablePath).snapshot(snapshotId)
     readManifestList(new Path(snap.manifestList), conf).map { m =>
       (m.get("manifest_path").toString,
         m.get("manifest_length").asInstanceOf[Long],
@@ -170,12 +142,7 @@ object IcebergInspect {
       snapshotId: Option[Long] = None): DataFrame = {
     import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
-    val metaText = currentMetaText(spark, tablePath)
-    val chain = parseSnapshots(metaText)
-    val snap = snapshotId.fold(currentSnapshotOf(metaText, chain))(id =>
-        chain.find(_.snapshotId == id))
-      .getOrElse(throw new IllegalArgumentException(
-        s"snapshot ${snapshotId.getOrElse("<current>")} not found"))
+    val snap = headOf(spark, tablePath).snapshot(snapshotId)
     val listRows = readManifestList(new Path(snap.manifestList), conf)
     val data = liveFilesWithSeq(listRows, table, conf).map { case (f, seq) =>
       (0, f.path, "PARQUET", f.specId,
@@ -203,12 +170,7 @@ object IcebergInspect {
       table: TableDef, snapshotId: Option[Long] = None): DataFrame = {
     import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
-    val metaText = currentMetaText(spark, tablePath)
-    val chain = parseSnapshots(metaText)
-    val snap = snapshotId.fold(currentSnapshotOf(metaText, chain))(id =>
-        chain.find(_.snapshotId == id))
-      .getOrElse(throw new IllegalArgumentException(
-        s"snapshot ${snapshotId.getOrElse("<current>")} not found"))
+    val snap = headOf(spark, tablePath).snapshot(snapshotId)
     val listRows = readManifestList(new Path(snap.manifestList), conf)
     val data = liveFilesWithSeq(listRows, table, conf)
       .groupBy { case (f, _) =>

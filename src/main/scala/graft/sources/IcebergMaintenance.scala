@@ -6,11 +6,9 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 import IcebergSnapshot.{DataFileInfo, ManifestEntry, ManifestListRow,
-  columnStats, currentSnapshotOf, decodeDataFileInfo, liveDeleteFiles,
-  liveFilesWithSeq, parseSnapshots,
-  partitionFieldsOf, pathKey, readAvroRows, readManifestList, readText, readVersionHint,
-  scanDataFiles, writeManifestEntries, writeManifestListRows,
-  writeNewMetadataVersion}
+  TableHead, columnStats, decodeDataFileInfo, liveDeleteFiles,
+  liveFilesWithSeq, partitionFieldsOf, pathKey, readAvroRows,
+  readManifestList, scanDataFiles}
 import graft.model.TableDef
 
 /** Table MAINTENANCE beyond snapshot expiry: orphan-file removal —
@@ -58,10 +56,8 @@ object IcebergMaintenance {
     val hintPath = new Path(metadataDir, "version-hint.text")
     require(fs.exists(hintPath),
       s"$tablePath is not an Iceberg table (no version hint) — refusing to sweep")
-    val version = readVersionHint(metadataDir, conf)
-    val metaText = readText(
-      new Path(metadataDir, s"v$version.metadata.json"), conf)
-    val chain = parseSnapshots(metaText)
+    val head = TableHead.read(tablePath, conf)
+    val (version, chain) = (head.version, head.chain)
 
     // reachable = manifest lists ∪ manifests ∪ every file path any
     // manifest entry records (all statuses), across the WHOLE chain
@@ -125,14 +121,9 @@ object IcebergMaintenance {
       timestampMs: Long = System.currentTimeMillis()): IcebergMetadata.SnapshotMeta = {
     require(targetBytes > 0)
     val conf = spark.sparkContext.hadoopConfiguration
-    val metadataDir = new Path(tablePath, "metadata")
-    val fs = FileSystem.get(metadataDir.toUri, conf)
-    val version = readVersionHint(metadataDir, conf)
-    val metaText = readText(
-      new Path(metadataDir, s"v$version.metadata.json"), conf)
-    val chain = parseSnapshots(metaText)
-    require(chain.nonEmpty, "rewriteZorder: table has no snapshots")
-    val current = currentSnapshotOf(metaText, chain).get
+    val head = TableHead.read(tablePath, conf)
+    val current = head.requireMain()
+    val fs = FileSystem.get(head.metadataDir.toUri, conf)
     val priorList = readManifestList(new Path(current.manifestList), conf)
     require(liveDeleteFiles(priorList, conf).isEmpty,
       "rewriteZorder with live delete files would resurrect deleted " +
@@ -149,12 +140,12 @@ object IcebergMaintenance {
     val live = liveFilesWithSeq(priorList, table, conf)
     if (live.isEmpty) return current
 
-    val newSeq = chain.map(_.sequenceNumber).max + 1
+    val next = head.next(table)
     val groups = live.groupBy(f => (f._1.specId, f._1.partitionValues))
       .toSeq.sortBy(_._1.toString)
     val rewritten = groups.zipWithIndex.flatMap {
       case (((sid, pv), fsOfPart), i) =>
-        val dir = new Path(tablePath, s"data/zorder-$newSeq-$i")
+        val dir = new Path(tablePath, s"data/zorder-${next.seq}-$i")
         val totalBytes = fsOfPart.map(_._1.sizeBytes).sum
         val nFiles = math.max(1,
           math.ceil(totalBytes.toDouble / targetBytes).toInt)
@@ -182,10 +173,6 @@ object IcebergMaintenance {
           }
     }
 
-    val snapshotId = java.util.UUID.nameUUIDFromBytes(
-      (table.fullName + s"-snapshot-$newSeq")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .getMostSignificantBits & Long.MaxValue
     // one data manifest per spec: ADDED rewritten files (new seq,
     // inherited) + DELETED originals (original seqs, explicit)
     val tagged: Seq[(Int, ManifestEntry)] =
@@ -195,14 +182,13 @@ object IcebergMaintenance {
     val rows = tagged.groupBy(_._1).toSeq.sortBy(_._1).zipWithIndex.map {
       case ((sid, tagEntries), i) =>
         val entries = tagEntries.map(_._2)
-        val manifest = writeManifestEntries(table, entries, metadataDir,
-          snapshotId, conf, ordinal = priorList.size + i, specId = sid)
+        val manifest = next.manifest(entries, priorList.size + i, sid)
         val added = entries.filter(_.status == 1).map(_.file)
         val removed = entries.filter(_.status == 2).map(_.file)
         ManifestListRow(manifest._1.toString, manifest._2,
-          sequenceNumber = newSeq,
+          sequenceNumber = next.seq,
           minSequenceNumber =
-            (newSeq +: entries.flatMap(_.sequenceNumber)).min,
+            (next.seq +: entries.flatMap(_.sequenceNumber)).min,
           addedFiles = added.size, existingFiles = 0,
           deletedFiles = removed.size,
           addedRows = added.map(_.recordCount).sum,
@@ -210,25 +196,8 @@ object IcebergMaintenance {
           deletedRows = removed.map(_.recordCount).sum,
           specId = sid)
     }
-    val listPath = writeManifestListRows(table, rows,
-      metadataDir, snapshotId, conf, newSeq, Some(current.snapshotId))
-    val snap = IcebergMetadata.SnapshotMeta(
-      snapshotId = snapshotId,
-      schemaId = table.schemaId,
-      timestampMs = timestampMs,
-      manifestList = listPath.toString,
-      addedFiles = rewritten.size.toLong,
-      addedRecords = rewritten.map(_.recordCount).sum,
-      sequenceNumber = newSeq,
-      parentSnapshotId = Some(current.snapshotId),
-      totalFiles = current.cumulativeFiles - live.size + rewritten.size,
-      totalRecords = current.cumulativeRecords, // rewrite: rows unchanged
-      operation = "replace",
-      deletedFiles = live.size.toLong,
-      deletedRecords = live.map(_._1.recordCount).sum)
-    writeNewMetadataVersion(table, tablePath, metadataDir, fs, version,
-      chain :+ snap, timestampMs)
-    snap
+    head.commitSnapshot(next, current, "replace", rows, timestampMs,
+      added = rewritten, removed = live.map(_._1))
   }
 
   /** Consolidate the current snapshot's manifest list — the
@@ -250,14 +219,8 @@ object IcebergMaintenance {
   def rewriteManifests(table: TableDef, tablePath: String,
       conf: Configuration = new Configuration(),
       timestampMs: Long = System.currentTimeMillis()): IcebergMetadata.SnapshotMeta = {
-    val metadataDir = new Path(tablePath, "metadata")
-    val fs = FileSystem.get(metadataDir.toUri, conf)
-    val version = readVersionHint(metadataDir, conf)
-    val metaText = readText(
-      new Path(metadataDir, s"v$version.metadata.json"), conf)
-    val chain = parseSnapshots(metaText)
-    require(chain.nonEmpty, "rewriteManifests: table has no snapshots")
-    val current = currentSnapshotOf(metaText, chain).get
+    val head = TableHead.read(tablePath, conf)
+    val current = head.requireMain()
     val listRows = readManifestList(new Path(current.manifestList), conf)
 
     // live entries bucketed by (manifest content, partition spec):
@@ -293,41 +256,17 @@ object IcebergMaintenance {
       .sortBy(_._1)
     if (listRows.size <= grouped.size) return current // already minimal
 
-    val newSeq = chain.map(_.sequenceNumber).max + 1
-    val snapshotId = java.util.UUID.nameUUIDFromBytes(
-      (table.fullName + s"-snapshot-$newSeq")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .getMostSignificantBits & Long.MaxValue
+    val next = head.next(table)
     val rows = grouped.zipWithIndex.map { case (((content, sid), files), i) =>
       val entries = files.map { case (f, seq) => ManifestEntry(0, Some(seq), f) }
-      val manifest = writeManifestEntries(table, entries, metadataDir,
-        snapshotId, conf, ordinal = i, specId = sid)
+      val manifest = next.manifest(entries, i, sid)
       ManifestListRow(manifest._1.toString, manifest._2,
-        sequenceNumber = newSeq,
+        sequenceNumber = next.seq,
         minSequenceNumber = files.map(_._2).min,
         addedFiles = 0, existingFiles = files.size, deletedFiles = 0,
         addedRows = 0L, existingRows = files.map(_._1.recordCount).sum,
         deletedRows = 0L, content = content, specId = sid)
     }
-    val listPath = writeManifestListRows(table, rows, metadataDir,
-      snapshotId, conf, newSeq, Some(current.snapshotId))
-    val snap = IcebergMetadata.SnapshotMeta(
-      snapshotId = snapshotId,
-      schemaId = table.schemaId,
-      timestampMs = timestampMs,
-      manifestList = listPath.toString,
-      addedFiles = 0L, addedRecords = 0L,
-      sequenceNumber = newSeq,
-      parentSnapshotId = Some(current.snapshotId),
-      totalFiles = current.cumulativeFiles,
-      totalRecords = current.cumulativeRecords,
-      operation = "replace",
-      totalDeleteFiles = current.totalDeleteFiles,
-      totalPositionDeletes = current.totalPositionDeletes,
-      totalEqualityDeletes = current.totalEqualityDeletes)
-    writeNewMetadataVersion(table, tablePath, metadataDir, fs, version,
-      chain :+ snap, timestampMs,
-      currentIdOverride = Some(snapshotId))
-    snap
+    head.commitSnapshot(next, current, "replace", rows, timestampMs)
   }
 }

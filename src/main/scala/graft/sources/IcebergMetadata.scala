@@ -186,6 +186,14 @@ object IcebergMetadata {
     def cumulativeRecords: Long = if (totalRecords >= 0) totalRecords else addedRecords
   }
 
+  /** `from` and its parent-link ancestors present in `chain`, newest
+    * first — the one ancestry walk every reader and committer shares. */
+  def ancestry(chain: Seq[SnapshotMeta], from: SnapshotMeta): Seq[SnapshotMeta] = {
+    val byId = chain.map(s => s.snapshotId -> s).toMap
+    Iterator.iterate(Option(from))(_.flatMap(_.parentSnapshotId).flatMap(byId.get))
+      .takeWhile(_.isDefined).map(_.get).toSeq
+  }
+
   /** Full table-spec v2 metadata document. With `snapshot = None` this
     * is the state a catalog records at CREATE TABLE (no snapshots,
     * current-snapshot-id −1); with a snapshot it is the post-append
@@ -236,10 +244,9 @@ object IcebergMetadata {
     // linear history the filter is the identity, so unstaged tables'
     // metadata bytes are unchanged.
     val logSnapshots = {
-      val byId = snapshots.map(s => s.snapshotId -> s).toMap
-      val ancestry = Iterator.iterate(head)(_.flatMap(_.parentSnapshotId)
-        .flatMap(byId.get)).takeWhile(_.isDefined).map(_.get.snapshotId).toSet
-      snapshots.filter(s => ancestry.contains(s.snapshotId))
+      val onMain = head.toSeq.flatMap(ancestry(snapshots, _))
+        .map(_.snapshotId).toSet
+      snapshots.filter(s => onMain.contains(s.snapshotId))
     }
     val snapJson = snapshots.toList.map { s =>
       JObject(List(

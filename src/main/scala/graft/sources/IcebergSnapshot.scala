@@ -605,21 +605,6 @@ object IcebergSnapshot {
     path
   }
 
-  /** Write the manifest list for a single-manifest append snapshot
-    * (prior manifests re-listed verbatim). */
-  def writeManifestList(table: TableDef, manifest: (Path, Long),
-      nFiles: Long, nRows: Long, metadataDir: Path, snapshotId: Long,
-      conf: Configuration, sequenceNumber: Long = 1L,
-      parentSnapshotId: Option[Long] = None,
-      priorManifests: Seq[GenericRecord] = Nil): Path =
-    writeManifestListRows(table,
-      Seq(ManifestListRow(manifest._1.toString, manifest._2,
-        sequenceNumber, sequenceNumber,
-        nFiles.toInt, 0, 0, nRows, 0L, 0L,
-        specId = IcebergMetadata.defaultSpecIdOf(table))),
-      metadataDir, snapshotId, conf, sequenceNumber, parentSnapshotId,
-      priorManifests)
-
   /** Drain every record of an Avro file on any Hadoop FS — the one
     * reader loop behind manifest-list reads, manifest reads and the
     * time-travel scan.
@@ -771,13 +756,14 @@ object IcebergSnapshot {
     val fs = FileSystem.get(metadataDir.toUri, conf)
     fs.mkdirs(metadataDir)
     val files = listDataFiles(new Path(tablePath, "data"), table, conf)
-    val snapshotId = UUID.nameUUIDFromBytes(
-      (table.fullName + "-snapshot-1").getBytes(StandardCharsets.UTF_8))
-      .getMostSignificantBits & Long.MaxValue
+    val snapshotId = snapshotIdOf(table, "snapshot", 1L)
     val manifest = writeManifest(table, files, metadataDir, snapshotId, conf)
     val nRows = files.map(_.recordCount).sum
-    val listPath = writeManifestList(table, manifest, files.size.toLong, nRows,
-      metadataDir, snapshotId, conf)
+    val listPath = writeManifestListRows(table,
+      Seq(ManifestListRow(manifest._1.toString, manifest._2, 1L, 1L,
+        files.size, 0, 0, nRows, 0L, 0L,
+        specId = IcebergMetadata.defaultSpecIdOf(table))),
+      metadataDir, snapshotId, conf, sequenceNumber = 1L, parentSnapshotId = None)
     val snap = IcebergMetadata.SnapshotMeta(
       snapshotId = snapshotId,
       schemaId = table.schemaId,
@@ -795,45 +781,6 @@ object IcebergSnapshot {
     try out.write(doc.getBytes(StandardCharsets.UTF_8)) finally out.close()
     writeVersionHint(metadataDir, 2, fs)
     snap
-  }
-
-  /** Parse the snapshot chain out of an existing metadata document. */
-  private[sources] def parseSnapshots(metaJson: String): Seq[IcebergMetadata.SnapshotMeta] = {
-    val meta = JsonMethods.parse(metaJson)
-    (meta \ "snapshots").asInstanceOf[JArray].arr.map { s =>
-      def str(p: String) = (s \ p).asInstanceOf[JString].s
-      def num(p: String) = (s \ p).asInstanceOf[JInt].num.toLong
-      def sum0(p: String) = (s \ "summary" \ p) match {
-        case JString(v) => v.toLong
-        case _ => 0L
-      }
-      IcebergMetadata.SnapshotMeta(
-        snapshotId = num("snapshot-id"),
-        timestampMs = num("timestamp-ms"),
-        manifestList = str("manifest-list"),
-        addedFiles = (s \ "summary" \ "added-data-files").asInstanceOf[JString].s.toLong,
-        addedRecords = (s \ "summary" \ "added-records").asInstanceOf[JString].s.toLong,
-        sequenceNumber = num("sequence-number"),
-        parentSnapshotId = (s \ "parent-snapshot-id") match {
-          case JInt(p) => Some(p.toLong)
-          case _ => None
-        },
-        totalFiles = (s \ "summary" \ "total-data-files").asInstanceOf[JString].s.toLong,
-        totalRecords = (s \ "summary" \ "total-records").asInstanceOf[JString].s.toLong,
-        operation = (s \ "summary" \ "operation").asInstanceOf[JString].s,
-        deletedFiles = sum0("deleted-data-files"),
-        deletedRecords = sum0("deleted-records"),
-        addedDeleteFiles = sum0("added-delete-files"),
-        addedPositionDeletes = sum0("added-position-deletes"),
-        addedEqualityDeletes = sum0("added-equality-deletes"),
-        totalDeleteFiles = sum0("total-delete-files"),
-        totalPositionDeletes = sum0("total-position-deletes"),
-        totalEqualityDeletes = sum0("total-equality-deletes"),
-        schemaId = (s \ "schema-id") match {
-          case JInt(v) => v.toInt
-          case _ => 0
-        })
-    }
   }
 
   /** Row-metadata column names [[scanDataFiles]] materializes when
@@ -932,7 +879,12 @@ object IcebergSnapshot {
       equalityIds: Seq[Int], seq: Long,
       partitionValues: Seq[Option[Any]] = Nil,
       sizeBytes: Long = 0L, recordCount: Long = 0L,
-      specId: Int = 0)
+      specId: Int = 0) {
+    /** The manifest row a rewrite re-lists this delete file under. */
+    def asFileInfo: DataFileInfo = DataFileInfo(path, sizeBytes, recordCount,
+      partitionValues = partitionValues, content = content,
+      equalityIds = equalityIds, specId = specId)
+  }
 
   /** The live delete files listed by a manifest list (content-1
     * manifest rows, non-DELETED entries). */
@@ -1061,14 +1013,7 @@ object IcebergSnapshot {
   private[sources] def resolveSnapshot(tablePath: String, table: TableDef,
       snapshotId: Option[Long], conf: Configuration)
       : (IcebergMetadata.SnapshotMeta, Seq[GenericRecord]) = {
-    val metadataDir = new Path(tablePath, "metadata")
-    val version = readVersionHint(metadataDir, conf)
-    val metaText = readText(new Path(metadataDir, s"v$version.metadata.json"), conf)
-    val chain = parseSnapshots(metaText)
-    val snap = snapshotId.fold(currentSnapshotOf(metaText, chain))(id =>
-      chain.find(_.snapshotId == id))
-      .getOrElse(throw new IllegalArgumentException(
-        s"snapshot ${snapshotId.getOrElse("<current>")} not found"))
+    val snap = TableHead.read(tablePath, conf).snapshot(snapshotId)
     (snap, readManifestList(new Path(snap.manifestList), conf))
   }
 
@@ -1232,34 +1177,6 @@ object IcebergSnapshot {
     if (keepRowMeta) residual else residual.drop(RowMetaFileCol, RowMetaPosCol)
   }
 
-  /** The MAIN head recorded in a metadata document, if any — with
-    * write-audit-publish in play the published head need not be the
-    * snapshots-array tail (a staged branch snapshot trails it), so
-    * every reader/committer that means "the current table state"
-    * resolves through here instead of `chain.last`. */
-  private[sources] def currentIdOf(metaJson: String): Option[Long] =
-    (JsonMethods.parse(metaJson) \ "current-snapshot-id") match {
-      case JInt(id) if id >= 0 => Some(id.toLong)
-      case _ => None
-    }
-
-  /** [[currentIdOf]] resolved into the chain; falls back to the tail
-    * (pre-override metadata, or a hand-built chain). */
-  private[sources] def currentSnapshotOf(metaJson: String,
-      chain: Seq[IcebergMetadata.SnapshotMeta])
-      : Option[IcebergMetadata.SnapshotMeta] =
-    currentIdOf(metaJson).flatMap(id => chain.find(_.snapshotId == id))
-      .orElse(chain.lastOption)
-
-  /** The table-properties map recorded in a metadata document. */
-  private[sources] def parseProperties(metaJson: String): Map[String, String] =
-    (JsonMethods.parse(metaJson) \ "properties") match {
-      case JObject(fields) => fields.collect {
-        case (k, JString(v)) => k -> v
-      }.toMap
-      case _ => Map.empty
-    }
-
   /** Snapshot id the MAIN head currently points at — None when the
     * table has no metadata yet OR has metadata but no committed
     * snapshot (the CREATE-only state, and the bootstrap crash window
@@ -1311,20 +1228,16 @@ object IcebergSnapshot {
     val key = fs.makeQualified(new Path(tablePath)).toString
     val cached = headIdCache.get(key)
     if (cached != null && cached._1 == token) return cached._2
-    val metaText = readText(metaFile, conf)
-    val head =
-      currentSnapshotOf(metaText, parseSnapshots(metaText)).map(_.snapshotId)
+    val head = new TableHead(tablePath, conf, version, readText(metaFile, conf))
+      .main.map(_.snapshotId)
     headIdCache.put(key, (token, head))
     head
   }
 
   /** The CURRENT table properties (spec string→string map). */
   def tableProperties(tablePath: String,
-      conf: Configuration = new Configuration()): Map[String, String] = {
-    val metadataDir = new Path(tablePath, "metadata")
-    val version = readVersionHint(metadataDir, conf)
-    parseProperties(readText(new Path(metadataDir, s"v$version.metadata.json"), conf))
-  }
+      conf: Configuration = new Configuration()): Map[String, String] =
+    TableHead.read(tablePath, conf).properties
 
   /** Set (upsert) table properties as a metadata-only commit — the
     * spec's `properties` map; a value of None removes the key. The
@@ -1332,22 +1245,96 @@ object IcebergSnapshot {
   def setTableProperties(table: TableDef, tablePath: String,
       props: Map[String, Option[String]],
       conf: Configuration = new Configuration(),
-      timestampMs: Long = System.currentTimeMillis()): Unit = {
-    val metadataDir = new Path(tablePath, "metadata")
-    val fs = FileSystem.get(metadataDir.toUri, conf)
-    val version = readVersionHint(metadataDir, conf)
-    val metaText = readText(new Path(metadataDir, s"v$version.metadata.json"), conf)
-    val chain = parseSnapshots(metaText)
-    writeNewMetadataVersion(table, tablePath, metadataDir, fs, version,
-      chain, timestampMs,
-      currentIdOverride = currentIdOf(metaText),
+      timestampMs: Long = System.currentTimeMillis()): Unit =
+    TableHead.read(tablePath, conf).commitMetadata(table, timestampMs,
       addProperties = props.collect { case (k, Some(v)) => k -> v },
       removeProperties = props.collect { case (k, None) => k }.toSet)
-  }
 
-  /** Named refs beyond `main`: (name, snapshot-id, type) triples. */
-  private[sources] def parseRefs(metaJson: String): Seq[(String, Long, String)] =
-    (JsonMethods.parse(metaJson) \ "refs") match {
+  /** Name-derived snapshot id: the UUID of (table, the committing
+    * site's `idName`, sequence number). A replayed commit reproduces
+    * its id, and with it every manifest and manifest-list name. */
+  private[sources] def snapshotIdOf(table: TableDef, idName: String,
+      seq: Long): Long =
+    UUID.nameUUIDFromBytes(
+      s"${table.fullName}-$idName-$seq".getBytes(StandardCharsets.UTF_8))
+      .getMostSignificantBits & Long.MaxValue
+
+  /** One read of a table's head: `version-hint.text` and the
+    * `vN.metadata.json` it names, read once and parsed once. Every head
+    * read and every commit in `graft.sources` goes through one (only
+    * the table-creating [[commitAppend]] has no head to read).
+    *
+    * The commit protocol it carries:
+    *  - READ ONCE. A commit derives everything it writes from one head:
+    *    the snapshot chain, the MAIN head (`current-snapshot-id`
+    *    resolved into the chain, else its tail — with write-audit-
+    *    publish a staged branch snapshot may trail main), the refs and
+    *    properties it carries forward, and the next sequence number
+    *    (table-global `max + 1`, so a staged branch never collides with
+    *    main).
+    *  - COMMIT POINT. [[commitMetadata]] creates `v{N+1}.metadata.json`
+    *    exclusively and only then flips the hint; a writer that loses
+    *    the version race gets [[CommitConflictException]].
+    *  - RETRY UNIT. A head is never refreshed in place: the whole commit
+    *    call is the unit [[withCommitRetry]] repeats, and each attempt
+    *    reads a fresh head.
+    *  - DETERMINISTIC IDS. [[next]] derives the new snapshot's id from
+    *    the name the committing site passes and the sequence number
+    *    ([[snapshotIdOf]]); [[commitSnapshot]] derives its summary,
+    *    every `total-*` field included, from the parent's totals and
+    *    the files the commit adds and removes. */
+  final class TableHead private[sources] (val tablePath: String,
+      val conf: Configuration, val version: Int, val metaText: String) {
+    val metadataDir: Path = new Path(tablePath, "metadata")
+    private[sources] lazy val json: JValue = JsonMethods.parse(metaText)
+
+    lazy val chain: Seq[IcebergMetadata.SnapshotMeta] =
+      (json \ "snapshots").asInstanceOf[JArray].arr.map { s =>
+        def num(p: String) = (s \ p).asInstanceOf[JInt].num.toLong
+        def sum(p: String) = (s \ "summary" \ p).asInstanceOf[JString].s.toLong
+        def sum0(p: String) = (s \ "summary" \ p) match {
+          case JString(v) => v.toLong
+          case _ => 0L
+        }
+        IcebergMetadata.SnapshotMeta(
+          snapshotId = num("snapshot-id"),
+          timestampMs = num("timestamp-ms"),
+          manifestList = (s \ "manifest-list").asInstanceOf[JString].s,
+          addedFiles = sum("added-data-files"),
+          addedRecords = sum("added-records"),
+          sequenceNumber = num("sequence-number"),
+          parentSnapshotId = (s \ "parent-snapshot-id") match {
+            case JInt(p) => Some(p.toLong)
+            case _ => None
+          },
+          totalFiles = sum("total-data-files"),
+          totalRecords = sum("total-records"),
+          operation = (s \ "summary" \ "operation").asInstanceOf[JString].s,
+          deletedFiles = sum0("deleted-data-files"),
+          deletedRecords = sum0("deleted-records"),
+          addedDeleteFiles = sum0("added-delete-files"),
+          addedPositionDeletes = sum0("added-position-deletes"),
+          addedEqualityDeletes = sum0("added-equality-deletes"),
+          totalDeleteFiles = sum0("total-delete-files"),
+          totalPositionDeletes = sum0("total-position-deletes"),
+          totalEqualityDeletes = sum0("total-equality-deletes"),
+          schemaId = (s \ "schema-id") match {
+            case JInt(v) => v.toInt
+            case _ => 0
+          })
+      }
+
+    /** The MAIN head: `current-snapshot-id` resolved into the chain,
+      * else the tail (pre-override metadata); None before the first
+      * snapshot. */
+    lazy val main: Option[IcebergMetadata.SnapshotMeta] =
+      ((json \ "current-snapshot-id") match {
+        case JInt(id) if id >= 0 => chain.find(_.snapshotId == id.toLong)
+        case _ => None
+      }).orElse(chain.lastOption)
+
+    /** Named refs beyond `main`: (name, snapshot-id, type) triples. */
+    lazy val refs: Seq[(String, Long, String)] = (json \ "refs") match {
       case JObject(fields) => fields.collect {
         case (name, v) if name != "main" =>
           (name, (v \ "snapshot-id").asInstanceOf[JInt].num.toLong,
@@ -1356,47 +1343,172 @@ object IcebergSnapshot {
       case _ => Nil
     }
 
-  /** Write metadata version N+1 carrying `snapshots` and advance the
-    * version hint — the shared tail of every commit. */
-  private[sources] def writeNewMetadataVersion(table: TableDef, tablePath: String,
-      metadataDir: Path, fs: FileSystem, version: Int,
-      snapshots: Seq[IcebergMetadata.SnapshotMeta],
-      timestampMs: Long,
-      addRefs: Seq[(String, Long, String)] = Nil,
-      removeRefs: Set[String] = Set.empty,
-      currentIdOverride: Option[Long] = None,
-      addProperties: Map[String, String] = Map.empty,
-      removeProperties: Set[String] = Set.empty): Unit = {
-    val metadataLog = (2 to version).map(v =>
-      timestampMs -> new Path(metadataDir, s"v${v - 1}.metadata.json").toString) :+
-      (timestampMs -> new Path(metadataDir, s"v$version.metadata.json").toString)
-    // refs carry forward across commits: the prior version's named
-    // refs survive (filtered to snapshots still in the chain — expiry
-    // retains ref'd snapshots, so a dropped ref is the only way one
-    // disappears), minus removals, plus/overridden-by additions
-    val ids = snapshots.map(_.snapshotId).toSet
-    val priorText = try Some(readText(
-      new Path(metadataDir, s"v$version.metadata.json"),
-      fs.getConf)) catch { case _: Exception => None }
-    val prior = priorText.map(parseRefs).getOrElse(Nil)
-    val refs = (prior.filterNot(r => removeRefs.contains(r._1))
-      .filterNot(r => addRefs.exists(_._1 == r._1)) ++ addRefs)
-      .filter(r => ids.contains(r._2))
-    // table properties carry forward across EVERY commit (appends,
-    // deletes, compactions, evolution, rollback) — a streaming sink's
-    // transaction guard must survive interleaved maintenance — minus
-    // removals, overridden by additions
-    val props = (priorText.map(parseProperties).getOrElse(Map.empty)
-      - "write.format.default" -- removeProperties) ++ addProperties
-    val doc = IcebergMetadata.metadataJsonChain(table, tablePath,
-      lastUpdatedMs = timestampMs, snapshots = snapshots,
-      metadataLog = metadataLog, extraRefs = refs,
-      currentIdOverride = currentIdOverride,
-      properties = props)
-    val metaFile = new Path(metadataDir, s"v${version + 1}.metadata.json")
-    val out = createExclusive(metaFile, fs, version + 1)
-    try out.write(doc.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    writeVersionHint(metadataDir, version + 1, fs)
+    /** The table-properties map. */
+    lazy val properties: Map[String, String] = (json \ "properties") match {
+      case JObject(fields) => fields.collect {
+        case (k, JString(v)) => k -> v
+      }.toMap
+      case _ => Map.empty
+    }
+
+    /** The table definition this metadata version records. */
+    lazy val tableDef: TableDef = IcebergTableLoader.fromMetadataJson(json)
+
+    /** The sequence number the next snapshot commits under. */
+    lazy val nextSequence: Long =
+      chain.map(_.sequenceNumber).maxOption.getOrElse(0L) + 1
+
+    /** The main head, refusing a table with no committed snapshot. */
+    def requireMain(): IcebergMetadata.SnapshotMeta = main.getOrElse(
+      throw new IllegalArgumentException(
+        s"$tablePath has no committed snapshot (metadata version $version)"))
+
+    /** The main head (None) or the retained snapshot `id`. */
+    def snapshot(id: Option[Long]): IcebergMetadata.SnapshotMeta =
+      id.fold(main)(i => chain.find(_.snapshotId == i)).getOrElse(
+        throw new IllegalArgumentException(
+          s"snapshot ${id.getOrElse("<current>")} not found"))
+
+    /** The head of branch `name`, if the branch exists. */
+    def branchHead(name: String): Option[IcebergMetadata.SnapshotMeta] =
+      refs.collectFirst { case (n, id, "branch") if n == name => id }
+        .flatMap(id => chain.find(_.snapshotId == id))
+
+    /** `from` and its retained ancestors, newest first. */
+    def ancestry(from: IcebergMetadata.SnapshotMeta): Seq[IcebergMetadata.SnapshotMeta] =
+      IcebergMetadata.ancestry(chain, from)
+
+    /** The data files under `<tablePath>/data` that no retained
+      * snapshot references yet — what an append, an overwrite, an
+      * upsert or a branch stage commits. The known set spans the WHOLE
+      * chain ([[knownFilePaths]]), so a file tombstoned by an earlier
+      * rewrite, or staged on a branch, is never claimed again. */
+    def newDataFiles(table: TableDef): Seq[DataFileInfo] =
+      listDataFiles(new Path(tablePath, "data"), table, conf,
+        skipPaths = knownFilePaths(chain, conf))
+
+    /** The next snapshot, its id derived from `idName` ([[snapshotIdOf]]). */
+    def next(table: TableDef, idName: String = "snapshot"): NextSnapshot =
+      new NextSnapshot(this, table,
+        snapshotIdOf(table, idName, nextSequence), nextSequence)
+
+    /** Commit `next` as a child of `parent`: write its manifest list
+      * (`rows`, then the `carried` rows of earlier snapshots re-listed
+      * verbatim), derive its summary, and commit the metadata. `added`
+      * and `removed` are the data and delete files the snapshot adds
+      * and retires; every summary count and every `total-*` field
+      * comes from them and the parent's totals, here and nowhere else.
+      * The new snapshot becomes the main head unless `mainId` names
+      * another (a branch stage keeps main where it is). */
+    def commitSnapshot(next: NextSnapshot, parent: IcebergMetadata.SnapshotMeta,
+        operation: String, rows: Seq[ManifestListRow], timestampMs: Long,
+        added: Seq[DataFileInfo] = Nil, removed: Seq[DataFileInfo] = Nil,
+        carried: Seq[GenericRecord] = Nil, mainId: Option[Long] = None,
+        addRefs: Seq[(String, Long, String)] = Nil,
+        addProperties: Map[String, String] = Map.empty)
+        : IcebergMetadata.SnapshotMeta = {
+      require(next.head eq this, "a snapshot commits on the head it was drawn from")
+      val listPath = writeManifestListRows(next.table, rows, metadataDir,
+        next.id, conf, next.seq, Some(parent.snapshotId), carried)
+      def records(fs: Seq[DataFileInfo], content: Int) =
+        fs.filter(_.content == content).map(_.recordCount).sum
+      def files(fs: Seq[DataFileInfo], data: Boolean) =
+        fs.count(f => (f.content == 0) == data).toLong
+      val snap = IcebergMetadata.SnapshotMeta(
+        snapshotId = next.id,
+        schemaId = next.table.schemaId,
+        timestampMs = timestampMs,
+        manifestList = listPath.toString,
+        sequenceNumber = next.seq,
+        parentSnapshotId = Some(parent.snapshotId),
+        operation = operation,
+        addedFiles = files(added, data = true),
+        addedRecords = records(added, 0),
+        deletedFiles = files(removed, data = true),
+        deletedRecords = records(removed, 0),
+        addedDeleteFiles = files(added, data = false),
+        addedPositionDeletes = records(added, 1),
+        addedEqualityDeletes = records(added, 2),
+        totalFiles = parent.cumulativeFiles +
+          files(added, data = true) - files(removed, data = true),
+        totalRecords = parent.cumulativeRecords +
+          records(added, 0) - records(removed, 0),
+        totalDeleteFiles = parent.totalDeleteFiles +
+          files(added, data = false) - files(removed, data = false),
+        totalPositionDeletes = parent.totalPositionDeletes +
+          records(added, 1) - records(removed, 1),
+        totalEqualityDeletes = parent.totalEqualityDeletes +
+          records(added, 2) - records(removed, 2))
+      commitMetadata(next.table, timestampMs, chain :+ snap,
+        mainId = mainId.orElse(Some(snap.snapshotId)), addRefs = addRefs,
+        addProperties = addProperties)
+      snap
+    }
+
+    /** Write metadata version N+1 — `snapshots` (by default the chain
+      * unchanged: a metadata-only commit) with `mainId` as the main
+      * head (by default the current one) — and flip the hint. Named
+      * refs and table properties carry forward from this head's text
+      * (refs to snapshots no longer in `snapshots` drop out), minus
+      * removals, overridden by additions; a streaming sink's
+      * transaction guard thereby survives every interleaved commit. */
+    def commitMetadata(table: TableDef, timestampMs: Long,
+        snapshots: Seq[IcebergMetadata.SnapshotMeta] = chain,
+        mainId: Option[Long] = main.map(_.snapshotId),
+        addRefs: Seq[(String, Long, String)] = Nil,
+        removeRefs: Set[String] = Set.empty,
+        addProperties: Map[String, String] = Map.empty,
+        removeProperties: Set[String] = Set.empty): Unit = {
+      val metadataLog = (1 to version).map(v =>
+        timestampMs -> new Path(metadataDir, s"v$v.metadata.json").toString)
+      val ids = snapshots.map(_.snapshotId).toSet
+      val keptRefs = (refs.filterNot(r => removeRefs.contains(r._1))
+        .filterNot(r => addRefs.exists(_._1 == r._1)) ++ addRefs)
+        .filter(r => ids.contains(r._2))
+      val props = (properties - "write.format.default" -- removeProperties) ++
+        addProperties
+      val doc = IcebergMetadata.metadataJsonChain(table, tablePath,
+        lastUpdatedMs = timestampMs, snapshots = snapshots,
+        metadataLog = metadataLog, extraRefs = keptRefs,
+        currentIdOverride = mainId, properties = props)
+      val fs = FileSystem.get(metadataDir.toUri, conf)
+      val metaFile = new Path(metadataDir, s"v${version + 1}.metadata.json")
+      val out = createExclusive(metaFile, fs, version + 1)
+      try out.write(doc.getBytes(StandardCharsets.UTF_8)) finally out.close()
+      writeVersionHint(metadataDir, version + 1, fs)
+    }
+  }
+
+  /** The id and sequence number of the snapshot a commit on `head`
+    * writes ([[TableHead.next]]), with writers for its manifests. */
+  final class NextSnapshot private[sources] (val head: TableHead,
+      val table: TableDef, val id: Long, val seq: Long) {
+    /** Write one manifest of this snapshot ([[writeManifestEntries]]). */
+    def manifest(entries: Seq[ManifestEntry], ordinal: Int,
+        specId: Int = -1): (Path, Long) =
+      writeManifestEntries(table, entries, head.metadataDir, id, head.conf,
+        ordinal, specId)
+
+    /** Write a manifest of files this snapshot ADDS and return its
+      * manifest-list row. */
+    def addedManifest(files: Seq[DataFileInfo], ordinal: Int,
+        specId: Int = IcebergMetadata.defaultSpecIdOf(table),
+        content: Int = 0): ManifestListRow = {
+      val (p, len) = manifest(files.map(ManifestEntry(1, None, _)),
+        ordinal, specId)
+      ManifestListRow(p.toString, len, seq, seq, files.size, 0, 0,
+        files.map(_.recordCount).sum, 0L, 0L, content, specId)
+    }
+  }
+
+  object TableHead {
+    /** Read the head of the table at `tablePath`. */
+    def read(tablePath: String, conf: Configuration): TableHead = {
+      val metadataDir = new Path(tablePath, "metadata")
+      val version = readVersionHint(metadataDir, conf)
+      new TableHead(tablePath, conf, version,
+        readText(new Path(metadataDir, s"v$version.metadata.json"), conf))
+    }
   }
 
   /** Two writers racing a commit on the same base version both try to
@@ -1445,7 +1557,7 @@ object IcebergSnapshot {
 
   /** Optimistic-concurrency retry for a COMMIT operation: run `body`
     * (which must RE-READ the table state each attempt — every commit
-    * in this engine does, resolving the current version hint first),
+    * in this engine does, reading a fresh [[TableHead]] first),
     * retrying when a concurrent commit wins the version race.
     * Linearizes N independent writers on one table: each retry rebuilds
     * against the new head, so every committed snapshot's parent is the
@@ -1559,14 +1671,9 @@ object IcebergSnapshot {
       timestampMs: Long = System.currentTimeMillis()): IcebergMetadata.SnapshotMeta = {
     require(targetBytes > 0)
     val conf = spark.sparkContext.hadoopConfiguration
-    val metadataDir = new Path(tablePath, "metadata")
-    val fs = FileSystem.get(metadataDir.toUri, conf)
-    val version = readVersionHint(metadataDir, conf)
-    val prevMetaFile = new Path(metadataDir, s"v$version.metadata.json")
-    val prevMetaText = readText(prevMetaFile, conf)
-    val chain = parseSnapshots(prevMetaText)
-    require(chain.nonEmpty, "nothing to compact: no snapshots")
-    val current = currentSnapshotOf(prevMetaText, chain).get
+    val head = TableHead.read(tablePath, conf)
+    val current = head.requireMain()
+    val fs = FileSystem.get(head.metadataDir.toUri, conf)
     val priorList = readManifestList(new Path(current.manifestList), conf)
     // a rewrite must APPLY live row-level deletes (and drop the delete
     // files it consumed) to preserve row content — that richer rewrite
@@ -1604,11 +1711,11 @@ object IcebergSnapshot {
     // rewrite each multi-file bin as one file under data/compact-<seq>/<i>;
     // re-sort by the declared sort order — concatenating sorted runs
     // would silently break the default sort order the metadata declares
-    val newSeq = chain.map(_.sequenceNumber).max + 1
+    val next = head.next(table)
     val sortCols = table.distributeByHash.toSeq
       .filter(table.columns.map(_.name).contains)
     val compacted = toMerge.zipWithIndex.map { case (bin, i) =>
-      val dir = new Path(tablePath, s"data/compact-$newSeq-$i")
+      val dir = new Path(tablePath, s"data/compact-${next.seq}-$i")
       // the shared evolved-aware scan: a mixed-schema bin read by
       // inference would elect one file's schema and drop the rest;
       // the bin's spec decides which identity columns are dir-encoded
@@ -1633,9 +1740,6 @@ object IcebergSnapshot {
         specId = bin.head._1.specId)
     }
 
-    val snapshotId = UUID.nameUUIDFromBytes(
-      (table.fullName + s"-snapshot-$newSeq").getBytes(StandardCharsets.UTF_8))
-      .getMostSignificantBits & Long.MaxValue
     val untouched = live.filterNot(f => merged.contains(f._1.path))
     val deleted = live.filter(f => merged.contains(f._1.path))
     // one data manifest PER SPEC: ADDED (new seq, inherited) +
@@ -1650,14 +1754,13 @@ object IcebergSnapshot {
     val rows = tagged.groupBy(_._1).toSeq.sortBy(_._1).zipWithIndex.map {
       case ((sid, tagEntries), i) =>
         val entries = tagEntries.map(_._2)
-        val manifest = writeManifestEntries(table, entries, metadataDir,
-          snapshotId, conf, ordinal = priorList.size + i, specId = sid)
+        val manifest = next.manifest(entries, priorList.size + i, sid)
         val added = entries.filter(_.status == 1).map(_.file)
         val existing = entries.filter(_.status == 0).map(_.file)
         val removed = entries.filter(_.status == 2).map(_.file)
         ManifestListRow(manifest._1.toString, manifest._2,
-          sequenceNumber = newSeq,
-          minSequenceNumber = (newSeq +: entries.flatMap(_.sequenceNumber)).min,
+          sequenceNumber = next.seq,
+          minSequenceNumber = (next.seq +: entries.flatMap(_.sequenceNumber)).min,
           addedFiles = added.size, existingFiles = existing.size,
           deletedFiles = removed.size,
           addedRows = added.map(_.recordCount).sum,
@@ -1665,25 +1768,8 @@ object IcebergSnapshot {
           deletedRows = removed.map(_.recordCount).sum,
           specId = sid)
     }
-    val listPath = writeManifestListRows(table, rows,
-      metadataDir, snapshotId, conf, newSeq, Some(current.snapshotId))
-    val snap = IcebergMetadata.SnapshotMeta(
-      snapshotId = snapshotId,
-      schemaId = table.schemaId,
-      timestampMs = timestampMs,
-      manifestList = listPath.toString,
-      addedFiles = compacted.size.toLong,
-      addedRecords = compacted.map(_.recordCount).sum,
-      sequenceNumber = newSeq,
-      parentSnapshotId = Some(current.snapshotId),
-      totalFiles = current.cumulativeFiles - deleted.size + compacted.size,
-      totalRecords = current.cumulativeRecords, // rewrite: rows unchanged
-      operation = "replace",
-      deletedFiles = deleted.size.toLong,
-      deletedRecords = deleted.map(_._1.recordCount).sum)
-    writeNewMetadataVersion(table, tablePath, metadataDir, fs, version,
-      chain :+ snap, timestampMs)
-    snap
+    head.commitSnapshot(next, current, "replace", rows, timestampMs,
+      added = compacted, removed = deleted.map(_._1))
   }
 
   /** Snapshot expiry — the GC half of table maintenance: drop all but
@@ -1703,21 +1789,15 @@ object IcebergSnapshot {
       conf: Configuration = new Configuration(),
       timestampMs: Long = System.currentTimeMillis()): (IcebergMetadata.SnapshotMeta, Seq[String]) = {
     require(keepLast >= 1, "must keep at least the current snapshot")
-    val metadataDir = new Path(tablePath, "metadata")
-    val fs = FileSystem.get(metadataDir.toUri, conf)
-    val version = readVersionHint(metadataDir, conf)
-    val metaText = readText(
-      new Path(metadataDir, s"v$version.metadata.json"), conf)
-    val chain = parseSnapshots(metaText)
-    require(chain.nonEmpty, "metadata carries no snapshots")
-    val mainHead = currentSnapshotOf(metaText, chain).get
+    val head = TableHead.read(tablePath, conf)
+    val chain = head.chain
+    val mainHead = head.requireMain()
     // snapshots referenced by named refs (tags/branches) are protected
     // from expiry, per the spec's ref-retention semantics — dropping
     // the ref is the only way to release them. The MAIN head is always
     // protected (with a staged WAP branch it need not sit in the
     // array-tail keepLast window).
-    val protectedIds =
-      parseRefs(metaText).map(_._2).toSet + mainHead.snapshotId
+    val protectedIds = head.refs.map(_._2).toSet + mainHead.snapshotId
     val lastK = chain.takeRight(keepLast).map(_.snapshotId).toSet
     val retained = chain.filter(s =>
       lastK.contains(s.snapshotId) || protectedIds.contains(s.snapshotId))
@@ -1748,11 +1828,10 @@ object IcebergSnapshot {
       (expiredReach.map(_._1).filterNot(keepLists) ++
         expiredReach.flatMap(_._2).filterNot(keepManifests) ++
         expiredReach.flatMap(_._3).filterNot(keepFiles)).distinct
+    val fs = FileSystem.get(head.metadataDir.toUri, conf)
     doomed.foreach(p => fs.delete(new Path(p), false))
 
-    writeNewMetadataVersion(table, tablePath, metadataDir, fs, version,
-      retained, timestampMs,
-      currentIdOverride = Some(mainHead.snapshotId))
+    head.commitMetadata(table, timestampMs, snapshots = retained)
     (mainHead, doomed)
   }
 
@@ -1767,39 +1846,24 @@ object IcebergSnapshot {
     require(name.nonEmpty && name != "main", "ref name must not be 'main'")
     require(refType == "tag" || refType == "branch",
       s"ref type must be tag|branch, got $refType")
-    val metadataDir = new Path(tablePath, "metadata")
-    val fs = FileSystem.get(metadataDir.toUri, conf)
-    val version = readVersionHint(metadataDir, conf)
-    val metaText = readText(new Path(metadataDir, s"v$version.metadata.json"), conf)
-    val chain = parseSnapshots(metaText)
-    require(chain.exists(_.snapshotId == snapshotId),
+    val head = TableHead.read(tablePath, conf)
+    require(head.chain.exists(_.snapshotId == snapshotId),
       s"snapshot $snapshotId not found")
-    writeNewMetadataVersion(table, tablePath, metadataDir, fs, version,
-      chain, timestampMs, addRefs = Seq((name, snapshotId, refType)),
-      currentIdOverride = currentIdOf(metaText))
+    head.commitMetadata(table, timestampMs,
+      addRefs = Seq((name, snapshotId, refType)))
   }
 
   /** Drop a named ref — its snapshot becomes expirable again. */
   def dropRef(table: TableDef, tablePath: String, name: String,
       conf: Configuration = new Configuration(),
-      timestampMs: Long = System.currentTimeMillis()): Unit = {
-    val metadataDir = new Path(tablePath, "metadata")
-    val fs = FileSystem.get(metadataDir.toUri, conf)
-    val version = readVersionHint(metadataDir, conf)
-    val metaText = readText(new Path(metadataDir, s"v$version.metadata.json"), conf)
-    val chain = parseSnapshots(metaText)
-    writeNewMetadataVersion(table, tablePath, metadataDir, fs, version,
-      chain, timestampMs, removeRefs = Set(name),
-      currentIdOverride = currentIdOf(metaText))
-  }
+      timestampMs: Long = System.currentTimeMillis()): Unit =
+    TableHead.read(tablePath, conf).commitMetadata(table, timestampMs,
+      removeRefs = Set(name))
 
   /** The current named refs of the table (name, snapshot-id, type). */
   def listRefs(tablePath: String,
-      conf: Configuration = new Configuration()): Seq[(String, Long, String)] = {
-    val metadataDir = new Path(tablePath, "metadata")
-    val version = readVersionHint(metadataDir, conf)
-    parseRefs(readText(new Path(metadataDir, s"v$version.metadata.json"), conf))
-  }
+      conf: Configuration = new Configuration()): Seq[(String, Long, String)] =
+    TableHead.read(tablePath, conf).refs
 
   /** [[readSnapshot]] addressed by ref name instead of snapshot id
     * (same optional stats-based `pruning`). */
@@ -1830,48 +1894,15 @@ object IcebergSnapshot {
       conf: Configuration = new Configuration(),
       timestampMs: Long = System.currentTimeMillis(),
       extraProperties: Map[String, String] = Map.empty): IcebergMetadata.SnapshotMeta = {
-    val metadataDir = new Path(tablePath, "metadata")
-    val fs = FileSystem.get(metadataDir.toUri, conf)
-    val version = readVersionHint(metadataDir, conf)
-    require(version >= 2, s"no committed snapshot to increment (version $version)")
-    val prevMetaFile = new Path(metadataDir, s"v$version.metadata.json")
-    val prevMetaText = readText(prevMetaFile, conf)
-    val chain = parseSnapshots(prevMetaText)
-    require(chain.nonEmpty, "metadata carries no snapshots")
-    val current = currentSnapshotOf(prevMetaText, chain).get
-
-    val priorList = readManifestList(new Path(current.manifestList), conf)
-    val known = knownFilePaths(chain, conf)
-    val newFiles = listDataFiles(new Path(tablePath, "data"), table, conf,
-        skipPaths = known)
-      .filterNot(f => known.contains(f.path))
+    val head = TableHead.read(tablePath, conf)
+    val current = head.requireMain()
+    val newFiles = head.newDataFiles(table)
     if (newFiles.isEmpty) return current
-
-    val newSeq = chain.map(_.sequenceNumber).max + 1
-    val snapshotId = UUID.nameUUIDFromBytes(
-      (table.fullName + s"-snapshot-$newSeq").getBytes(StandardCharsets.UTF_8))
-      .getMostSignificantBits & Long.MaxValue
-    val manifest = writeManifest(table, newFiles, metadataDir, snapshotId, conf,
-      ordinal = priorList.size)
-    val nRows = newFiles.map(_.recordCount).sum
-    val listPath = writeManifestList(table, manifest, newFiles.size.toLong, nRows,
-      metadataDir, snapshotId, conf, sequenceNumber = newSeq,
-      parentSnapshotId = Some(current.snapshotId), priorManifests = priorList)
-    val snap = IcebergMetadata.SnapshotMeta(
-      snapshotId = snapshotId,
-      schemaId = table.schemaId,
-      timestampMs = timestampMs,
-      manifestList = listPath.toString,
-      addedFiles = newFiles.size.toLong,
-      addedRecords = nRows,
-      sequenceNumber = newSeq,
-      parentSnapshotId = Some(current.snapshotId),
-      totalFiles = current.cumulativeFiles + newFiles.size,
-      totalRecords = current.cumulativeRecords + nRows)
-
-    writeNewMetadataVersion(table, tablePath, metadataDir, fs, version,
-      chain :+ snap, timestampMs, addProperties = extraProperties)
-    snap
+    val priorList = readManifestList(new Path(current.manifestList), conf)
+    val next = head.next(table)
+    head.commitSnapshot(next, current, "append",
+      Seq(next.addedManifest(newFiles, priorList.size)), timestampMs,
+      added = newFiles, carried = priorList, addProperties = extraProperties)
   }
 
   /** Commit a WHOLE-TABLE OVERWRITE snapshot — the SQL INSERT
@@ -1889,93 +1920,50 @@ object IcebergSnapshot {
   def commitOverwriteAll(table: TableDef, tablePath: String,
       conf: Configuration = new Configuration(),
       timestampMs: Long = System.currentTimeMillis()): IcebergMetadata.SnapshotMeta = {
-    val metadataDir = new Path(tablePath, "metadata")
-    val fs = FileSystem.get(metadataDir.toUri, conf)
-    val version = readVersionHint(metadataDir, conf)
-    require(version >= 2,
-      s"no committed snapshot to overwrite (version $version)")
-    val metaText = readText(new Path(metadataDir, s"v$version.metadata.json"), conf)
-    val chain = parseSnapshots(metaText)
-    require(chain.nonEmpty, "metadata carries no snapshots")
-    val current = currentSnapshotOf(metaText, chain).get
+    val head = TableHead.read(tablePath, conf)
+    val current = head.requireMain()
     val priorList = readManifestList(new Path(current.manifestList), conf)
     // chain-wide known set, not just the current snapshot's: files
     // staged by a racing writer between our data write and this commit
     // must not be claimed (the appendIncrement discipline)
-    val known = knownFilePaths(chain, conf)
-    val newFiles = listDataFiles(new Path(tablePath, "data"), table, conf,
-        skipPaths = known)
-      .filterNot(f => known.contains(f.path))
+    val newFiles = head.newDataFiles(table)
     val liveData = liveFilesWithSeq(priorList, table, conf)
     val liveDeletes = liveDeleteFiles(priorList, conf)
 
-    val newSeq = chain.map(_.sequenceNumber).max + 1
-    val snapshotId = UUID.nameUUIDFromBytes(
-      (table.fullName + s"-snapshot-$newSeq").getBytes(StandardCharsets.UTF_8))
-      .getMostSignificantBits & Long.MaxValue
-
+    val next = head.next(table)
     var ordinal = priorList.size
     def nextOrdinal(): Int = { val o = ordinal; ordinal += 1; o }
-    val nRows = newFiles.map(_.recordCount).sum
     val rowsB = Seq.newBuilder[ManifestListRow]
-    if (newFiles.nonEmpty) {
-      val m = writeManifest(table, newFiles, metadataDir, snapshotId, conf,
-        ordinal = nextOrdinal())
-      rowsB += ManifestListRow(m._1.toString, m._2, newSeq, newSeq,
-        newFiles.size, 0, 0, nRows, 0L, 0L,
-        specId = IcebergMetadata.defaultSpecIdOf(table))
-    }
+    if (newFiles.nonEmpty) rowsB += next.addedManifest(newFiles, nextOrdinal())
     // retire prior live data files under their ORIGINAL specs (original
     // sequence numbers preserved, so earlier snapshots still resolve)
     liveData.groupBy(_._1.specId).toSeq.sortBy(_._1).foreach { case (s, lf) =>
-      val m = writeManifestEntries(table,
+      val m = next.manifest(
         lf.map { case (f, seq) => ManifestEntry(2, Some(seq), f) },
-        metadataDir, snapshotId, conf, ordinal = nextOrdinal(), specId = s)
+        nextOrdinal(), s)
       rowsB += ManifestListRow(m._1.toString, m._2,
-        sequenceNumber = newSeq,
-        minSequenceNumber = (newSeq +: lf.map(_._2)).min,
+        sequenceNumber = next.seq,
+        minSequenceNumber = (next.seq +: lf.map(_._2)).min,
         addedFiles = 0, existingFiles = 0, deletedFiles = lf.size,
         addedRows = 0L, existingRows = 0L,
         deletedRows = lf.map(_._1.recordCount).sum, specId = s)
     }
     // retire live delete files too — nothing they tombstone survives
     liveDeletes.groupBy(_.specId).toSeq.sortBy(_._1).foreach { case (s, dels) =>
-      val m = writeManifestEntries(table,
-        dels.map(d => ManifestEntry(2, Some(d.seq), DataFileInfo(
-          d.path, d.sizeBytes, d.recordCount,
-          partitionValues = d.partitionValues,
-          content = d.content, equalityIds = d.equalityIds, specId = s))),
-        metadataDir, snapshotId, conf, ordinal = nextOrdinal(), specId = s)
+      val m = next.manifest(
+        dels.map(d => ManifestEntry(2, Some(d.seq), d.asFileInfo)),
+        nextOrdinal(), s)
       rowsB += ManifestListRow(m._1.toString, m._2,
-        sequenceNumber = newSeq,
-        minSequenceNumber = (newSeq +: dels.map(_.seq)).min,
+        sequenceNumber = next.seq,
+        minSequenceNumber = (next.seq +: dels.map(_.seq)).min,
         addedFiles = 0, existingFiles = 0, deletedFiles = dels.size,
         addedRows = 0L, existingRows = 0L, deletedRows = 0L,
         content = 1, specId = s)
     }
     val rows = rowsB.result()
     if (rows.isEmpty) return current // empty-over-empty: nothing to commit
-
-    val listPath = writeManifestListRows(table, rows, metadataDir,
-      snapshotId, conf, newSeq, Some(current.snapshotId))
-    val snap = IcebergMetadata.SnapshotMeta(
-      snapshotId = snapshotId,
-      schemaId = table.schemaId,
-      timestampMs = timestampMs,
-      manifestList = listPath.toString,
-      addedFiles = newFiles.size.toLong,
-      addedRecords = nRows,
-      sequenceNumber = newSeq,
-      parentSnapshotId = Some(current.snapshotId),
-      totalFiles = newFiles.size.toLong,
-      totalRecords = nRows,
-      operation = "overwrite",
-      deletedFiles = liveData.size.toLong,
-      deletedRecords = liveData.map(_._1.recordCount).sum,
-      totalDeleteFiles = 0L, totalPositionDeletes = 0L,
-      totalEqualityDeletes = 0L)
-    writeNewMetadataVersion(table, tablePath, metadataDir, fs, version,
-      chain :+ snap, timestampMs)
-    snap
+    head.commitSnapshot(next, current, "overwrite", rows, timestampMs,
+      added = newFiles,
+      removed = liveData.map(_._1) ++ liveDeletes.map(_.asFileInfo))
   }
 }

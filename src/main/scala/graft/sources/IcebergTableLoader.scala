@@ -1,9 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 import graft.model.{Db2Column, IcebergPartitionField, TableDef}
 
@@ -65,18 +63,13 @@ object IcebergTableLoader {
   }
 
   /** Load the TableDef of the table at `tablePath` from its current
-    * metadata version (version-hint → vN.metadata.json). */
+    * metadata version. */
   def load(tablePath: String,
-      conf: Configuration = new Configuration()): TableDef = {
-    val metadataDir = new Path(tablePath, "metadata")
-    val version = IcebergSnapshot.readVersionHint(metadataDir, conf)
-    fromMetadataJson(IcebergSnapshot.readText(
-      new Path(metadataDir, s"v$version.metadata.json"), conf))
-  }
+      conf: Configuration = new Configuration()): TableDef =
+    IcebergSnapshot.TableHead.read(tablePath, conf).tableDef
 
-  /** Parse a metadata document into a TableDef. */
-  def fromMetadataJson(metaText: String): TableDef = {
-    val meta = JsonMethods.parse(metaText)
+  /** Build the TableDef a parsed metadata document records. */
+  def fromMetadataJson(meta: JValue): TableDef = {
     val currentSchemaId = (meta \ "current-schema-id").asInstanceOf[JInt].num.toInt
     val schemas = (meta \ "schemas").asInstanceOf[JArray].arr.map(schemaColumns)
     val current = schemas.find(_._1 == currentSchemaId).getOrElse(

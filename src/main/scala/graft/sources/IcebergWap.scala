@@ -1,10 +1,7 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
-import java.util.UUID
-
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 
 import graft.model.TableDef
 import IcebergSnapshot._
@@ -22,7 +19,7 @@ import IcebergSnapshot._
   * stay on the published head, so the staged snapshot trails the
   * array without being current. Every reader/committer of "the
   * current table state" resolves through
-  * [[IcebergSnapshot.currentSnapshotOf]] rather than the array tail,
+  * [[IcebergSnapshot.TableHead.main]] rather than the array tail,
   * and sequence numbers are table-global (`max + 1` across the whole
   * chain), so interleaved main-side commits can never collide with a
   * staged branch. Publishing is a metadata-only commit that moves
@@ -40,25 +37,6 @@ import IcebergSnapshot._
   */
 object IcebergWap {
 
-  private def load(tablePath: String, conf: Configuration) = {
-    val metadataDir = new Path(tablePath, "metadata")
-    val fs = FileSystem.get(metadataDir.toUri, conf)
-    val version = readVersionHint(metadataDir, conf)
-    require(version >= 2, s"no committed snapshot (version $version)")
-    val metaText = readText(
-      new Path(metadataDir, s"v$version.metadata.json"), conf)
-    val chain = parseSnapshots(metaText)
-    require(chain.nonEmpty, "metadata carries no snapshots")
-    (metadataDir, fs, version, metaText, chain)
-  }
-
-  private def branchHeadOf(metaText: String,
-      chain: Seq[IcebergMetadata.SnapshotMeta], branch: String)
-      : Option[IcebergMetadata.SnapshotMeta] =
-    parseRefs(metaText).collectFirst {
-      case (n, id, "branch") if n == branch => id
-    }.flatMap(id => chain.find(_.snapshotId == id))
-
   /** Stage the files that appeared under `<tablePath>/data` since any
     * retained snapshot as an append on `branch` — main is untouched.
     * The branch is created at the main head on first use. Returns the
@@ -72,48 +50,18 @@ object IcebergWap {
       timestampMs: Long = System.currentTimeMillis()): IcebergMetadata.SnapshotMeta = {
     require(branch.nonEmpty && branch != "main",
       "stage on a named audit branch, not main")
-    val (metadataDir, fs, version, metaText, chain) = load(tablePath, conf)
-    val mainHead = currentSnapshotOf(metaText, chain).get
-    val head = branchHeadOf(metaText, chain, branch).getOrElse(mainHead)
-
-    val priorList = readManifestList(new Path(head.manifestList), conf)
-    val known = knownFilePaths(chain, conf)
-    val newFiles = listDataFiles(new Path(tablePath, "data"), table, conf,
-        skipPaths = known)
-      .filterNot(f => known.contains(f.path))
-    if (newFiles.isEmpty) return head
-
-    val newSeq = chain.map(_.sequenceNumber).max + 1
-    val snapshotId = UUID.nameUUIDFromBytes(
-      (table.fullName + s"-branch-$branch-snapshot-$newSeq")
-        .getBytes(StandardCharsets.UTF_8))
-      .getMostSignificantBits & Long.MaxValue
-    val manifest = writeManifest(table, newFiles, metadataDir, snapshotId, conf,
-      ordinal = priorList.size)
-    val nRows = newFiles.map(_.recordCount).sum
-    val listPath = writeManifestList(table, manifest, newFiles.size.toLong,
-      nRows, metadataDir, snapshotId, conf, sequenceNumber = newSeq,
-      parentSnapshotId = Some(head.snapshotId), priorManifests = priorList)
-    val snap = IcebergMetadata.SnapshotMeta(
-      snapshotId = snapshotId,
-      schemaId = table.schemaId,
-      timestampMs = timestampMs,
-      manifestList = listPath.toString,
-      addedFiles = newFiles.size.toLong,
-      addedRecords = nRows,
-      sequenceNumber = newSeq,
-      parentSnapshotId = Some(head.snapshotId),
-      totalFiles = head.cumulativeFiles + newFiles.size,
-      totalRecords = head.cumulativeRecords + nRows,
-      totalDeleteFiles = head.totalDeleteFiles,
-      totalPositionDeletes = head.totalPositionDeletes,
-      totalEqualityDeletes = head.totalEqualityDeletes)
-
-    writeNewMetadataVersion(table, tablePath, metadataDir, fs, version,
-      chain :+ snap, timestampMs,
-      addRefs = Seq((branch, snap.snapshotId, "branch")),
-      currentIdOverride = Some(mainHead.snapshotId))
-    snap
+    val head = TableHead.read(tablePath, conf)
+    val mainHead = head.requireMain()
+    val parent = head.branchHead(branch).getOrElse(mainHead)
+    val newFiles = head.newDataFiles(table)
+    if (newFiles.isEmpty) return parent
+    val priorList = readManifestList(new Path(parent.manifestList), conf)
+    val next = head.next(table, s"branch-$branch-snapshot")
+    head.commitSnapshot(next, parent, "append",
+      Seq(next.addedManifest(newFiles, priorList.size)), timestampMs,
+      added = newFiles, carried = priorList,
+      mainId = Some(mainHead.snapshotId),
+      addRefs = Seq((branch, next.id, "branch")))
   }
 
   /** Publish: move `main` to the head of `branch`. Metadata-only;
@@ -124,23 +72,17 @@ object IcebergWap {
   def fastForwardMain(table: TableDef, tablePath: String, branch: String,
       conf: Configuration = new Configuration(),
       timestampMs: Long = System.currentTimeMillis()): IcebergMetadata.SnapshotMeta = {
-    val (metadataDir, fs, version, metaText, chain) = load(tablePath, conf)
-    val mainHead = currentSnapshotOf(metaText, chain).get
-    val target = branchHeadOf(metaText, chain, branch).getOrElse(
+    val head = TableHead.read(tablePath, conf)
+    val mainHead = head.requireMain()
+    val target = head.branchHead(branch).getOrElse(
       throw new IllegalArgumentException(s"no branch $branch"))
     if (target.snapshotId == mainHead.snapshotId) return mainHead
-
-    val byId = chain.map(s => s.snapshotId -> s).toMap
-    val ancestry = Iterator.iterate(Option(target))(
-      _.flatMap(_.parentSnapshotId).flatMap(byId.get))
-      .takeWhile(_.isDefined).map(_.get.snapshotId).toSet
-    require(ancestry.contains(mainHead.snapshotId),
+    require(head.ancestry(target).exists(_.snapshotId == mainHead.snapshotId),
       s"main (${mainHead.snapshotId}) is not an ancestor of " +
         s"$branch's head (${target.snapshotId}) — main advanced past " +
         "the fork; re-stage the branch or abandon it")
 
-    writeNewMetadataVersion(table, tablePath, metadataDir, fs, version,
-      chain, timestampMs, currentIdOverride = Some(target.snapshotId))
+    head.commitMetadata(table, timestampMs, mainId = Some(target.snapshotId))
     target
   }
 
@@ -171,20 +113,15 @@ object IcebergWap {
   def cherryPickAppend(table: TableDef, tablePath: String, branch: String,
       conf: Configuration = new Configuration(),
       timestampMs: Long = System.currentTimeMillis()): IcebergMetadata.SnapshotMeta = {
-    val (metadataDir, fs, version, metaText, chain) = load(tablePath, conf)
-    val mainHead = currentSnapshotOf(metaText, chain).get
-    val target = branchHeadOf(metaText, chain, branch).getOrElse(
+    val head = TableHead.read(tablePath, conf)
+    val mainHead = head.requireMain()
+    val target = head.branchHead(branch).getOrElse(
       throw new IllegalArgumentException(s"no branch $branch"))
-    val byId = chain.map(s => s.snapshotId -> s).toMap
-    def ancestry(from: IcebergMetadata.SnapshotMeta) =
-      Iterator.iterate(Option(from))(
-        _.flatMap(_.parentSnapshotId).flatMap(byId.get))
-        .takeWhile(_.isDefined).map(_.get).toSeq
-    val mainAnc = ancestry(mainHead).map(_.snapshotId).toSet
+    val mainAnc = head.ancestry(mainHead).map(_.snapshotId).toSet
     if (mainAnc.contains(target.snapshotId)) return mainHead
-    val segment = ancestry(target)
-      .takeWhile(s => !mainAnc.contains(s.snapshotId))
-    require(ancestry(target).drop(segment.size).nonEmpty,
+    val targetAnc = head.ancestry(target)
+    val segment = targetAnc.takeWhile(s => !mainAnc.contains(s.snapshotId))
+    require(targetAnc.drop(segment.size).nonEmpty,
       s"branch $branch does not fork from main's retained history — " +
         "cannot cherry-pick (fork expired?)")
     val nonAppend = segment.filterNot(_.operation == "append")
@@ -209,46 +146,14 @@ object IcebergWap {
       }.groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
     require(bySpec.nonEmpty, s"staged segment of $branch adds no data files")
 
-    val newSeq = chain.map(_.sequenceNumber).max + 1
-    val snapshotId = UUID.nameUUIDFromBytes(
-      (table.fullName + s"-cherrypick-$newSeq")
-        .getBytes(StandardCharsets.UTF_8))
-      .getMostSignificantBits & Long.MaxValue
+    val next = head.next(table, "cherrypick")
     val priorList = readManifestList(new Path(mainHead.manifestList), conf)
-    var ordinal = priorList.size
-    val rows = bySpec.toSeq.sortBy(_._1).map { case (sid, files) =>
-      val (p, len) = writeManifestEntries(table,
-        files.map(f => ManifestEntry(1, None, f)), metadataDir,
-        snapshotId, conf, ordinal, specId = sid)
-      ordinal += 1
-      ManifestListRow(p.toString, len, newSeq, newSeq,
-        files.size, 0, 0, files.map(_.recordCount).sum, 0L, 0L,
-        specId = sid)
+    val rows = bySpec.toSeq.sortBy(_._1).zipWithIndex.map { case ((sid, files), i) =>
+      next.addedManifest(files, priorList.size + i, specId = sid)
     }
-    val listPath = writeManifestListRows(table, rows, metadataDir,
-      snapshotId, conf, newSeq, Some(mainHead.snapshotId),
-      priorManifests = priorList)
-    val nFiles = bySpec.values.map(_.size).sum.toLong
-    val nRows = bySpec.values.flatten.map(_.recordCount).sum
-    val snap = IcebergMetadata.SnapshotMeta(
-      snapshotId = snapshotId,
-      schemaId = table.schemaId,
-      timestampMs = timestampMs,
-      manifestList = listPath.toString,
-      addedFiles = nFiles,
-      addedRecords = nRows,
-      sequenceNumber = newSeq,
-      parentSnapshotId = Some(mainHead.snapshotId),
-      totalFiles = mainHead.cumulativeFiles + nFiles,
-      totalRecords = mainHead.cumulativeRecords + nRows,
-      totalDeleteFiles = mainHead.totalDeleteFiles,
-      totalPositionDeletes = mainHead.totalPositionDeletes,
-      totalEqualityDeletes = mainHead.totalEqualityDeletes)
-    writeNewMetadataVersion(table, tablePath, metadataDir, fs, version,
-      chain :+ snap, timestampMs,
-      addRefs = Seq((branch, snap.snapshotId, "branch")),
-      currentIdOverride = Some(snap.snapshotId))
-    snap
+    head.commitSnapshot(next, mainHead, "append", rows, timestampMs,
+      added = bySpec.toSeq.sortBy(_._1).flatMap(_._2), carried = priorList,
+      addRefs = Seq((branch, next.id, "branch")))
   }
 
   /** Roll `main` back to a retained ANCESTOR snapshot — the first
@@ -269,22 +174,17 @@ object IcebergWap {
   def rollbackMain(table: TableDef, tablePath: String, snapshotId: Long,
       conf: Configuration = new Configuration(),
       timestampMs: Long = System.currentTimeMillis()): IcebergMetadata.SnapshotMeta = {
-    val (metadataDir, fs, version, metaText, chain) = load(tablePath, conf)
-    val mainHead = currentSnapshotOf(metaText, chain).get
+    val head = TableHead.read(tablePath, conf)
+    val mainHead = head.requireMain()
     if (snapshotId == mainHead.snapshotId) return mainHead
-    val target = chain.find(_.snapshotId == snapshotId).getOrElse(
+    val target = head.chain.find(_.snapshotId == snapshotId).getOrElse(
       throw new IllegalArgumentException(
         s"snapshot $snapshotId not in the retained chain (expired?)"))
-    val byId = chain.map(s => s.snapshotId -> s).toMap
-    val ancestry = Iterator.iterate(Option(mainHead))(
-      _.flatMap(_.parentSnapshotId).flatMap(byId.get))
-      .takeWhile(_.isDefined).map(_.get.snapshotId).toSet
-    require(ancestry.contains(snapshotId),
+    require(head.ancestry(mainHead).exists(_.snapshotId == snapshotId),
       s"snapshot $snapshotId is not an ancestor of main " +
         s"(${mainHead.snapshotId}) — rollback only walks main's own " +
         "history; use fastForwardMain for branch heads")
-    writeNewMetadataVersion(table, tablePath, metadataDir, fs, version,
-      chain, timestampMs, currentIdOverride = Some(snapshotId))
+    head.commitMetadata(table, timestampMs, mainId = Some(snapshotId))
     target
   }
 }

@@ -126,31 +126,24 @@ class GraftIcebergCatalog extends TableCatalog with SupportsNamespaces
   override def loadTable(ident: Identifier, version: String): Table = {
     val path = pathOf(ident)
     if (!isTableDir(new Path(path))) throw new NoSuchTableException(ident)
-    val tdef = IcebergTableLoader.load(path, conf)
+    val head = IcebergSnapshot.TableHead.read(path, conf)
     val sid: Option[Long] =
       if (version == "main") None
       else {
-        def refLookup: Option[Long] =
-          IcebergSnapshot.listRefs(path, conf).collectFirst {
-            case (n, id, _) if n == version => id
-          }
+        def refLookup: Option[Long] = head.refs.collectFirst {
+          case (n, id, _) if n == version => id
+        }
         // toLongOption, not toLong: an all-digit string longer than
         // Long.MaxValue is a legal TAG NAME and must fall through to
         // the ref lookup, not throw NumberFormatException
-        val numeric: Option[Long] =
-          version.toLongOption.filter(_ >= 0).flatMap { id =>
-            val metadataDir = new Path(path, "metadata")
-            val v = IcebergSnapshot.readVersionHint(metadataDir, conf)
-            val chain = IcebergSnapshot.parseSnapshots(IcebergSnapshot
-              .readText(new Path(metadataDir, s"v$v.metadata.json"), conf))
-            Some(id).filter(chain.map(_.snapshotId).toSet)
-          }
+        val numeric: Option[Long] = version.toLongOption.filter(id =>
+          id >= 0 && head.chain.exists(_.snapshotId == id))
         Some(numeric.orElse(refLookup).getOrElse(
           throw new IllegalArgumentException(
             s"VERSION AS OF '$version': no such retained snapshot id " +
               s"or tag/branch on ${ident.name()}")))
       }
-    new GraftIcebergTable(path, tdef, sid)
+    new GraftIcebergTable(path, head.tableDef, sid)
   }
 
   /** SQL time travel — `TIMESTAMP AS OF <t>`: the latest MAIN-ancestry
@@ -161,24 +154,15 @@ class GraftIcebergCatalog extends TableCatalog with SupportsNamespaces
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     val path = pathOf(ident)
     if (!isTableDir(new Path(path))) throw new NoSuchTableException(ident)
-    val tdef = IcebergTableLoader.load(path, conf)
-    val metadataDir = new Path(path, "metadata")
-    val v = IcebergSnapshot.readVersionHint(metadataDir, conf)
-    val metaText = IcebergSnapshot.readText(
-      new Path(metadataDir, s"v$v.metadata.json"), conf)
-    val chain = IcebergSnapshot.parseSnapshots(metaText)
-    val byId = chain.map(s => s.snapshotId -> s).toMap
-    val head = IcebergSnapshot.currentSnapshotOf(metaText, chain)
-    val ancestry = Iterator.iterate(head)(
-      _.flatMap(_.parentSnapshotId).flatMap(byId.get))
-      .takeWhile(_.isDefined).map(_.get).toSeq
+    val head = IcebergSnapshot.TableHead.read(path, conf)
+    val ancestry = head.main.toSeq.flatMap(head.ancestry)
     val ms = Math.floorDiv(timestamp, 1000L)
     val snap = ancestry.find(_.timestampMs <= ms).getOrElse(
       throw new IllegalArgumentException(
         s"TIMESTAMP AS OF $ms ms: before the first commit of " +
           s"${ident.name()} (earliest retained: " +
           s"${ancestry.lastOption.map(_.timestampMs).getOrElse(0L)} ms)"))
-    new GraftIcebergTable(path, tdef, Some(snap.snapshotId))
+    new GraftIcebergTable(path, head.tableDef, Some(snap.snapshotId))
   }
 
   /** ALTER TABLE wired to the engine's field-id-correct evolution

@@ -43,10 +43,11 @@ import graft.sources.IcebergPruning.ColumnBound
   * ([[IcebergTableLoader]]) — no DDL in hand, like any real Iceberg
   * reader.
   *
-  * Options: `snapshot-id` (time travel), `ref` (named tag/branch),
-  * `strict-types` is not needed — unsupported predicate shapes just
-  * don't prune. Column pruning projects before the V1 hand-off, so
-  * the parquet scans read only the requested columns.
+  * Read options: `snapshot-id` (time travel) or `ref` (a named tag or
+  * branch; `main` is the current head). A predicate shape with no
+  * bound translation just doesn't prune. Column pruning projects
+  * before the V1 hand-off, so the parquet scans read only the
+  * requested columns.
   *
   * Observability: every executed scan records a
   * [[GraftIcebergScans.ScanReport]] (kept/skipped file lists + the

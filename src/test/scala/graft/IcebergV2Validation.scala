@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.avro.file.DataFileReader
+import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.json4s._
 
 /** Structural validation of Iceberg table-spec v2 metadata, shared by
@@ -101,6 +103,48 @@ object IcebergV2Validation {
       val log = (meta \ "snapshot-log").asInstanceOf[JArray].arr
       assert(log.nonEmpty &&
         (log.last \ "snapshot-id").asInstanceOf[JInt].num.toLong == cur)
+      validateTotals(snap)
+    }
+  }
+
+  /** All rows of an Avro file at a (possibly scheme-qualified) path. */
+  private def avroRows(path: String): Seq[GenericRecord] = {
+    val reader = new DataFileReader(
+      new java.io.File(new org.apache.hadoop.fs.Path(path).toUri.getPath),
+      new GenericDatumReader[GenericRecord]())
+    try { val out = Seq.newBuilder[GenericRecord]
+      while (reader.hasNext) out += reader.next()
+      out.result()
+    } finally reader.close()
+  }
+
+  /** The snapshot's summary totals agree with its manifests: the live
+    * (status ≠ 2) entries its manifest list reaches give the data-file
+    * count, the delete-file count and the position / equality delete
+    * record counts. Documents built in memory name manifest lists that
+    * were never written; those have nothing to check against. */
+  private def validateTotals(snap: JValue): Unit = {
+    val listPath = (snap \ "manifest-list").asInstanceOf[JString].s
+    if (new java.io.File(new org.apache.hadoop.fs.Path(listPath).toUri.getPath).exists) {
+      val live = avroRows(listPath)
+        .flatMap(m => avroRows(m.get("manifest_path").toString))
+        .filter(_.get("status").asInstanceOf[Int] != 2)
+        .map(_.get("data_file").asInstanceOf[GenericRecord])
+      def content(f: GenericRecord) = f.get("content").asInstanceOf[Int]
+      def records(c: Int) = live.filter(content(_) == c)
+        .map(_.get("record_count").asInstanceOf[Long]).sum
+      def total(k: String) = (snap \ "summary" \ k) match {
+        case JString(v) => v.toLong
+        case _ => 0L
+      }
+      val expected = Seq(
+        "total-data-files" -> live.count(content(_) == 0).toLong,
+        "total-delete-files" -> live.count(content(_) != 0).toLong,
+        "total-position-deletes" -> records(1),
+        "total-equality-deletes" -> records(2))
+      for ((k, n) <- expected)
+        assert(total(k) == n, s"summary.$k is ${total(k)} but the manifests " +
+          s"of ${(snap \ "snapshot-id").values} hold $n")
     }
   }
 }

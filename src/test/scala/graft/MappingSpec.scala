@@ -1143,4 +1143,35 @@ class MappingSpec extends AnyFunSuite {
       IcebergSnapshot.readSnapshot(spark, out, table, Some(del.snapshotId))
     }
   }
+
+  test("appendIncrement after an upsert and a delete carries the delete " +
+      "totals forward") {
+    import graft.sources.{IcebergInspect, IcebergSnapshot}
+    import spark.implicits._
+    val table = Db2Parser.parse(
+      "CREATE TABLE S.TOTALS (K BIGINT NOT NULL, N INTEGER);").tables.head
+    val out = java.nio.file.Files.createTempDirectory("iceberg_totals").toString
+    SchemaTranslator.migrateTable(
+      (1L to 10L).map(k => (k, k.toInt)).toDF("K", "N"), table, out)
+    // three equality-delete keys, then one position delete
+    SchemaTranslator.mergeUpsert(
+      Seq((1L, 100), (2L, 200), (11L, 110)).toDF("K", "N"), table, out, Seq("K"))
+    SchemaTranslator.deleteWhere(spark, table, out, col("K") === 5L)
+    SchemaTranslator.appendIncrement(Seq((12L, 120)).toDF("K", "N"), table, out)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val head = IcebergSnapshot.currentSnapshotId(out, conf).get
+    val summary = IcebergInspect.snapshotsTable(spark, out)
+      .filter(col("snapshot_id") === head).collect().head
+      .getAs[Map[String, String]]("summary")
+    assert(summary("operation") === "append")
+    assert(Seq("total-delete-files", "total-position-deletes",
+      "total-equality-deletes").map(summary) === Seq("2", "1", "3"))
+    assert(IcebergSnapshot.readSnapshot(spark, out, table).count() === 11L)
+    val version = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(out, "metadata", "version-hint.text")), "UTF-8").trim
+    IcebergV2Validation.validateV2(org.json4s.jackson.JsonMethods.parse(
+      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+        out, "metadata", s"v$version.metadata.json")), "UTF-8")),
+      expectSnapshot = true)
+  }
 }
